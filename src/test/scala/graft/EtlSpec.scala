@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.control.NonFatal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.etl.{BatchRecord, Identifiers, IncrementalRunner, JdbcRangedSource, ParquetRangeSink, StateStore}
 
@@ -86,6 +89,112 @@ class EtlSpec extends SparkSpec {
     assert(fixed.size == 1 && fixed.head.status == "DONE")
     assert(runner.validate(src, "orders", "o_orderkey").isEmpty)
     assert(spark.read.parquet(s"$out/data/orders/range_*").count() == src.count())
+  }
+
+  /** Spark jobs `body` starts: jobs are tagged with a one-off job group
+    * and counted by a listener, polling until the events go quiet. */
+  private def jobsDuring(body: => Unit): Int = {
+    val group = s"etl-jobs-${System.nanoTime()}"
+    val started = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
+      var last = -1
+      var stable = 0
+      var waited = 0
+      while (stable < 3 && waited < 100) { // quiet for 3×100ms, cap 10s
+        Thread.sleep(100)
+        waited += 1
+        val cur = started.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+    } finally sc.removeSparkListener(listener)
+    started.get()
+  }
+
+  test("control plane runs no Spark job: one write per range, state and validate job-free") {
+    val src = Tables.orders(spark, sfDir) // keys 0..1499
+    def migrate(batch: Long) = {
+      val out = tmp()
+      val state = new StateStore(spark, s"$out/state")
+      val runner = new IncrementalRunner(spark, state,
+        new ParquetRangeSink(s"$out/data"), batchSize = batch)
+      var k = 0
+      val jobs = jobsDuring { k = runner.run(src, "orders", "o_orderkey").size }
+      (out, runner, k, jobs)
+    }
+    val (out, runner, k, runJobs) = migrate(400)
+    assert(k == 4)
+    // one write per range plus the bounds probe (at most two jobs)
+    assert(runJobs <= k + 2, s"$runJobs jobs for $k ranges")
+    // a fresh instance reads from disk, the first from its cache
+    val state = new StateStore(spark, s"$out/state")
+    assert(jobsDuring(assert(state.read().size == k)) == 0)
+    assert(jobsDuring(state.upsert(Seq(state.read().head))) == 0)
+    assert(jobsDuring(assert(state.frontier("orders") == 1499L)) == 0)
+    // validate: the one source aggregate, independent of the range count
+    val few = jobsDuring(assert(runner.validate(src, "orders", "o_orderkey").isEmpty))
+    val (_, manyRunner, manyK, _) = migrate(100)
+    assert(manyK == 15)
+    val many = jobsDuring(assert(manyRunner.validate(src, "orders", "o_orderkey").isEmpty))
+    assert(few == many && many < k, s"validate jobs: $few for $k ranges, $many for $manyK")
+  }
+
+  test("footer counts answer as the Spark readback did on every edge case") {
+    val src = Tables.orders(spark, sfDir)
+    val out = tmp()
+    val sink = new ParquetRangeSink(s"$out/data")
+    def sparkCount(lo: Long, hi: Long): Long =
+      try spark.read.parquet(sink.path("t", lo, hi)).count()
+      catch { case NonFatal(_) => -1L }
+    def same(lo: Long, hi: Long): Long = {
+      val n = sink.count(spark, "t", lo, hi)
+      assert(n == sparkCount(lo, hi), s"range ($lo, $hi]")
+      n
+    }
+    def dir(lo: Long, hi: Long) = Paths.get(sink.path("t", lo, hi))
+    def range(lo: Long, hi: Long) =
+      src.filter(col("o_orderkey") > lo && col("o_orderkey") <= hi)
+    // several part files: their footers sum
+    assert(sink.write(range(0, 600).repartition(3), "t", 0, 600) == 600)
+    assert(dir(0, 600).toFile.list().count(_.endsWith(".parquet")) >= 2)
+    assert(same(0, 600) == 600)
+    // stray `_` and `.` files (including a junk .crc) are skipped
+    Files.write(dir(0, 600).resolve("_stray"), "not parquet".getBytes("UTF-8"))
+    Files.write(dir(0, 600).resolve(".stray.crc"), "not parquet".getBytes("UTF-8"))
+    assert(same(0, 600) == 600)
+    // an empty source range commits 0 rows and reads back 0
+    assert(sink.write(range(5000, 6000), "t", 5000, 6000) == 0)
+    assert(same(5000, 6000) == 0)
+    // a deleted range directory, and one holding only _SUCCESS
+    assert(same(7000, 8000) == -1)
+    Files.createDirectories(dir(8000, 9000))
+    Files.createFile(dir(8000, 9000).resolve("_SUCCESS"))
+    assert(same(8000, 9000) == -1)
+    // an unreadable footer gives -1; a rewrite of the range replaces it
+    sink.write(range(600, 700), "t", 600, 700)
+    Files.write(dir(600, 700).resolve("part-junk.parquet"), "not parquet".getBytes("UTF-8"))
+    assert(same(600, 700) == -1)
+    assert(sink.write(range(600, 700), "t", 600, 700) == 100)
+    assert(same(600, 700) == 100)
+  }
+
+  test("an empty source range migrates as 0 rows and validates clean") {
+    val src = Tables.orders(spark, sfDir)
+      .filter(col("o_orderkey") <= 399 || col("o_orderkey") > 799)
+    val out = tmp()
+    val runner = new IncrementalRunner(spark, new StateStore(spark, s"$out/state"),
+      new ParquetRangeSink(s"$out/data"), batchSize = 400)
+    val recs = runner.run(src, "orders", "o_orderkey")
+    assert(recs.map(r => (r.pkLower, r.rowCount)).contains((399L, 0L)))
+    assert(runner.validate(src, "orders", "o_orderkey").isEmpty)
   }
 
   test("gzipped NDJSON round trip (the reference's transport format, A8)") {

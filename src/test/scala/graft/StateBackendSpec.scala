@@ -112,6 +112,58 @@ class StateBackendSpec extends SparkSpec {
     assert(b.pending("t").map(_.pkLower) == Seq(30L))
   }
 
+  test("state store reads the Spark-written layout and continues from it") {
+    import spark.implicits._
+    val dir = tmp()
+    val old = Seq(rec(-1, 10, "DONE", 1), rec(10, 20, "ERROR", 2), rec(20, 30, "DONE", 3))
+    // the layout earlier versions wrote: one Spark parquet write + marker
+    old.toDS().coalesce(1).write.parquet(s"$dir/v=0")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "v=0", "_COMMITTED"))
+    val st = new StateStore(spark, dir)
+    assert(st.currentVersion == 0L && st.read() == old)
+    st.upsert(Seq(rec(10, 20, "DONE", 4), rec(30, 40, "DONE", 4)))
+    val want = Seq(rec(-1, 10, "DONE", 1), rec(20, 30, "DONE", 3),
+      rec(10, 20, "DONE", 4), rec(30, 40, "DONE", 4))
+    assert(st.currentVersion == 1L && st.read() == want)
+    assert(new StateStore(spark, dir).read() == want)
+    // and Spark still reads what the store writes
+    assert(spark.read.parquet(s"$dir/v=1").as[BatchRecord].collect().toSeq == want)
+  }
+
+  test("state store: two instances on one dir each see the other's commit") {
+    val dir = tmp()
+    val a = new StateStore(spark, dir)
+    val b = new StateStore(spark, dir)
+    a.upsert(Seq(rec(-1, 10, "DONE", 1)))
+    assert(b.read() == Seq(rec(-1, 10, "DONE", 1)))
+    b.upsert(Seq(rec(10, 20, "DONE", 2)))
+    assert(a.frontier("t") == 20L)
+    a.upsert(Seq(rec(20, 30, "PENDING", 3)))
+    assert(b.read() == Seq(rec(-1, 10, "DONE", 1), rec(10, 20, "DONE", 2),
+      rec(20, 30, "PENDING", 3)))
+    assert(b.pending("t").map(_.pkLower) == Seq(20L))
+  }
+
+  test("state store: a failed upsert leaves read() on the last committed version") {
+    val dir = tmp()
+    val st = new StateStore(spark, dir)
+    st.upsert(Seq(rec(-1, 10, "DONE", 1)))
+    val before = st.read()
+    // a regular file where the next version's directory must go
+    val blocker = java.nio.file.Paths.get(dir, "v=1")
+    java.nio.file.Files.write(blocker, "x".getBytes("UTF-8"))
+    intercept[java.io.IOException](st.upsert(Seq(rec(10, 20, "DONE", 2))))
+    assert(st.currentVersion == 0L && st.read() == before)
+    assert(new StateStore(spark, dir).read() == before)
+    // an uncommitted v=1 left by a crashed writer is invisible, then replaced
+    java.nio.file.Files.delete(blocker)
+    java.nio.file.Files.createDirectories(blocker)
+    java.nio.file.Files.write(blocker.resolve("part-00000.parquet"), "torn".getBytes("UTF-8"))
+    assert(new StateStore(spark, dir).read() == before)
+    st.upsert(Seq(rec(10, 20, "DONE", 2)))
+    assert(new StateStore(spark, dir).read() == before :+ rec(10, 20, "DONE", 2))
+  }
+
   test("manifest backend: atomic-rename commit survives every crash point") {
     val dir = tmp()
     val st = new ManifestStateStore(spark, dir)
