@@ -37,25 +37,18 @@ trait JdbcStage {
     u
   }
 
-  /** [[stage]] exactly once per (database, table) per JVM: repeat
-    * calls with the same target return the URL without re-writing.
-    * The staged content is a pure function of the input relation, so
-    * within one session the second stage would write byte-identical
-    * rows — all it adds is wall time (the bench rerun path measured
-    * the full write on every rep). The key is recorded only AFTER a
-    * successful stage, so a failed write retries rather than leaving
-    * a poisoned memo. Callers key `dbDir` on the applicationId, so a
-    * fresh process never sees a stale database. */
+  /** [[stage]] once per (engine, database, table) per JVM, memoized
+    * through [[graft.Staged]]: repeat calls with the same target
+    * return the URL without re-writing. The staged content is a pure
+    * function of the input relation, so within one session the second
+    * stage would write byte-identical rows — all it adds is wall time
+    * (the bench rerun path measured the full write on every rep). A
+    * failed write leaves no entry, so the next call retries. Callers
+    * key `dbDir` on the applicationId, so a fresh process never sees a
+    * stale database, and stage one table at a time: two concurrent
+    * first calls for one table would both drop and rewrite it. */
   def stageOnce(df: DataFrame, dbDir: String, table: String): String =
-    JdbcStage.stagedOnce.synchronized {
-      val u = url(dbDir)
-      val key = s"$u#$table"
-      if (!JdbcStage.stagedOnce.contains(key)) {
-        stage(df, dbDir, table)
-        JdbcStage.stagedOnce += key
-      }
-      u
-    }
+    graft.Staged.once(s"jdbc $driver $table", dbDir)(stage(df, dbDir, table))
 
   /** Ranged, partitioned JDBC read of a staged table: Spark plans
     * `numPartitions` concurrent stride reads over `pkCol` — the
@@ -78,12 +71,6 @@ trait JdbcStage {
   * (`MsSqlServerDialect` / `MySQLDialect`) recorded in MIGRATION.md
   * "Source dialects" — the same rows, now structural instead of
   * prose. */
-object JdbcStage {
-  /** JVM-wide memo of completed stages ([[JdbcStage.stageOnce]]) —
-    * bounded: one short string per staged (database, table) pair. */
-  private[etl] val stagedOnce = scala.collection.mutable.Set[String]()
-}
-
 object SourceDialects {
 
   /** Catalyst type a Spark JDBC read produces for an MSSQL column

@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.util.control.NonFatal
+
 /** Shared /tmp staging hygiene for operators that materialize
   * app-id-unique working directories (bucketed-join stages, compaction
   * round trips). One definition so the liveness policy can't diverge
@@ -25,6 +27,6 @@ object Staging {
         .filter(f => f.getName.startsWith(prefix) &&
           !f.getName.endsWith(s"_$appId") && f.lastModified() < cutoff)
         .foreach(f => org.apache.commons.io.FileUtils.deleteQuietly(f))
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
   }
 }

@@ -26,9 +26,9 @@ object Evaluate {
     * series family (kendallTau/ordinalAssoc, acf/pacf/ljungBox,
     * hodgesLehmann, durbinWatson) folds over.
     *
-    * Staged ONCE per process and fixture dir (the TradeGraph memo
-    * pattern): the relation is BOUNDED BY CONSTRUCTION — |flags| ≤ 3
-    * (an enum) × |months| ≤ the fixed TPC-H shipdate calendar
+    * Staged ONCE per process and fixture dir through [[graft.Staged]]
+    * (as [[TradeGraph]] is): the relation is BOUNDED BY CONSTRUCTION —
+    * |flags| ≤ 3 (an enum) × |months| ≤ the fixed TPC-H shipdate calendar
     * (1992-1998, ≤ 84 values at ANY corpus size) ≤ ~252 rows of
     * (string, timestamp, long, long) — so collecting it is bounded
     * metadata, never a function of corpus size. Before the memo a
@@ -38,14 +38,12 @@ object Evaluate {
     * relation, which also turns every downstream self-join/window in
     * this family into local-relation work (no fact-table lineage under
     * 30+ Exchange nodes per query). Values are exact integer sums, so
-    * every process stages identical rows. */
-  private val seriesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType,
-             Array[org.apache.spark.sql.Row])]()
-
-  private def monthlySeries(s: SparkSession, dir: String): DataFrame = {
-    val (schema, rows) = seriesMemo.computeIfAbsent(dir, d => {
-      val df = Tables.lineitem(s, d)
+    * every process stages identical rows; a loud require fails the
+    * build past 4,096 rows. */
+  private def seriesRows(s: SparkSession, dir: String)
+      : (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) =
+    graft.Staged.once("monthly_series", dir) {
+      val df = Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"),
           date_trunc("month", col("l_shipdate")).as("mon"))
         .agg(
@@ -58,21 +56,22 @@ object Evaluate {
         s"monthlySeries stage collected ${collected.length} rows — the " +
           "flag×month bound no longer holds; re-derive before staging")
       (df.schema, collected)
-    })
+    }
+
+  private def monthlySeries(s: SparkSession, dir: String): DataFrame = {
+    val (schema, rows) = seriesRows(s, dir)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** The staged series as per-flag (flag → x-series in month order,
     * ties impossible: mon is a group key) — the local form the
     * ACF-family drivers (acf/pacf/ljungBox) fold over. */
-  private def seriesByFlag(s: SparkSession, dir: String): Seq[(String, Array[Long])] = {
-    monthlySeries(s, dir) // populate the memo
-    seriesMemo.get(dir)._2.toSeq
+  private def seriesByFlag(s: SparkSession, dir: String): Seq[(String, Array[Long])] =
+    seriesRows(s, dir)._2.toSeq
       .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2)))
       .groupBy(_._1).toSeq
       .map { case (f, rs) => f -> rs.sortBy(_._2.getTime).map(_._3).toArray }
       .sortBy(_._1)
-  }
 
   /** Local ACF over the staged series — the exact computation the
     * former 36-Exchange plan ran (c_t = n·x_t − S exact longs, BigInt

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 
 /** Lineitem's per-(returnflag, extendedprice) price census with
   * cumulative order statistics, staged ONCE per process and fixture
@@ -39,32 +39,19 @@ import graft.Tables
   * adjudicated on), so it stages to parquet like [[ShingleStage]], not
   * driver memory: the first consumer computes and writes, the rest
   * re-read the staged files. The per-flag cumulative window is 3
-  * single-task streams over grid-bounded rows — fine at any SF. The
-  * staging path is keyed by canonical fixture dir AND process (pid),
-  * so concurrent sweeps never clobber each other, and recomputation
-  * across processes is deterministic (integer sums, no RNG).
+  * single-task streams over grid-bounded rows — fine at any SF.
+  * Memoized through [[graft.Staged]]; recomputation is deterministic
+  * (integer sums, no RNG).
   */
 object PriceStage {
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def stageBase(dir: String): String = {
-    val pid = java.lang.ProcessHandle.current().pid()
-    val full = new java.io.File(dir).getCanonicalPath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(full.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"/tmp/graft_price_stage_${new java.io.File(dir).getName}_${tag}_$pid"
-  }
-
   /** Staged cumulative price census (see object doc). */
   def census(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(memo.computeIfAbsent(dir, d => {
-      val path = s"${stageBase(d)}/price_census.parquet"
+    Staged.parquet(s, "price_census", dir) { path =>
       val byFlag = Window.partitionBy(col("l_returnflag"))
         .orderBy(col("l_extendedprice"))
       val whole = Window.partitionBy(col("l_returnflag"))
-      Tables.lineitem(s, d)
+      Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"), col("l_extendedprice"))
         .agg(count(lit(1)).as("c"),
           sum(col("l_quantity").cast("bigint")).as("w"))
@@ -73,6 +60,5 @@ object PriceStage {
         .withColumn("nt", sum(col("c")).over(whole))
         .withColumn("wt", sum(col("w")).over(whole))
         .write.mode("overwrite").parquet(path)
-      path // memo records only after a successful write (stageOnce rule)
-    }))
+    }
 }

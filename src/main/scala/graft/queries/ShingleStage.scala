@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.operators.Dedup
 
 /** The documents table's shingle artifacts, staged ONCE per process
@@ -28,50 +28,28 @@ import graft.operators.Dedup
   * not driver memory: the first consumer computes and writes, the rest
   * re-read the staged files. That is exactly what a 100 TB curation
   * pipeline does — materialize the signature and candidate-pair tables
-  * once, then run every audit over them. The staging path is keyed by
-  * fixture dir AND process (pid), so concurrent sweeps (Verify + Bench
-  * in one session) never clobber each other's stage; recomputation
-  * across processes is deterministic (md5 hashes), so every process
-  * stages identical values.
+  * once, then run every audit over them. Both are memoized through
+  * [[graft.Staged]]; recomputation is deterministic (md5 hashes), so
+  * every build stages identical values.
   */
 object ShingleStage {
-
-  private val profMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ovMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def stageBase(dir: String): String = {
-    val pid = java.lang.ProcessHandle.current().pid()
-    // key by the FULL canonical path (hashed), not just the basename:
-    // the memo above is keyed by the full dir string, so two fixture
-    // dirs sharing a basename must not share a stage path (the second
-    // stage would overwrite the first while its memo still points there)
-    val full = new java.io.File(dir).getCanonicalPath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(full.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"/tmp/graft_shingle_stage_${new java.io.File(dir).getName}_${tag}_$pid"
-  }
 
   /** Staged per-doc shingle profiles (doc_id, hs, sig) for n = 3,
     * 16 permutations — the one parameterization every registered
     * consumer uses. */
   def profiles(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(profMemo.computeIfAbsent(dir, d => {
-      val path = s"${stageBase(d)}/profiles3x16.parquet"
+    Staged.parquet(s, "shingle_profiles3x16", dir) { path =>
       Dedup.shingleProfiles(
-          Tables.documents(s, d).select(col("doc_id"), col("text")), 3, 16)
+          Tables.documents(s, dir).select(col("doc_id"), col("text")), 3, 16)
         .write.mode("overwrite").parquet(path)
-      path // memo records only after a successful write (stageOnce rule)
-    }))
+    }
 
   /** Staged shingle-overlap pair relation for n = 3, derived from
     * [[profiles]] — same rows as
     * `Dedup.shingleOverlapCounts(documents, 3)`. */
   def overlap3(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(ovMemo.computeIfAbsent(dir, d => {
-      val path = s"${stageBase(d)}/overlap3.parquet"
-      val sh = profiles(s, d)
+    Staged.parquet(s, "shingle_overlap3", dir) { path =>
+      val sh = profiles(s, dir)
         .select(col("doc_id"), size(col("hs")).as("n_sh"),
           explode(col("hs")).as("shash"))
       sh.select(col("shash"), col("doc_id").as("doc_id_a"), col("n_sh").as("n_a"))
@@ -81,6 +59,5 @@ object ShingleStage {
         .groupBy(col("doc_id_a"), col("doc_id_b"), col("n_a"), col("n_b"))
         .agg(count(lit(1)).as("inter"))
         .write.mode("overwrite").parquet(path)
-      path
-    }))
+    }
 }

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.util.control.NonFatal
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.etl.{BatchRecord, Identifiers, IncrementalRunner, JdbcRangedSource, ParquetRangeSink, StateStore}
 
@@ -89,34 +87,6 @@ class EtlSpec extends SparkSpec {
     assert(fixed.size == 1 && fixed.head.status == "DONE")
     assert(runner.validate(src, "orders", "o_orderkey").isEmpty)
     assert(spark.read.parquet(s"$out/data/orders/range_*").count() == src.count())
-  }
-
-  /** Spark jobs `body` starts: jobs are tagged with a one-off job group
-    * and counted by a listener, polling until the events go quiet. */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = s"etl-jobs-${System.nanoTime()}"
-    val started = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job count")
-      try body finally sc.clearJobGroup()
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) { // quiet for 3×100ms, cap 10s
-        Thread.sleep(100)
-        waited += 1
-        val cur = started.get()
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
-    } finally sc.removeSparkListener(listener)
-    started.get()
   }
 
   test("control plane runs no Spark job: one write per range, state and validate job-free") {

@@ -120,8 +120,9 @@ class ShuffleVolumeSpec extends SparkSpec {
 
   test("weighted percentiles shuffle percentile metadata, never the stream") {
     // The round-16 rewrite reads the staged cumulative price census
-    // (PriceStage — the census+window build runs once per process at
-    // stage time, not in this consuming action) and reduces it with a
+    // (PriceStage, memoized through Staged — the census+window build
+    // runs once per process and fixture dir while the query is built,
+    // not in this consuming action) and reduces it with a
     // map-side-combining min/when aggregate: the consuming action's
     // wire carries only per-flag partial-aggregate rows plus the
     // 3-row result sort — never the distribution, never the stream.

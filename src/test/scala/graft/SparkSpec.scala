@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,34 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts: jobs are tagged with a one-off job group
+    * and counted by a listener, polling until the events go quiet. */
+  def jobsDuring(body: => Unit): Int = {
+    val group = s"spec-jobs-${System.nanoTime()}"
+    val started = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
+      var last = -1
+      var stable = 0
+      var waited = 0
+      while (stable < 3 && waited < 100) { // quiet for 3×100ms, cap 10s
+        Thread.sleep(100)
+        waited += 1
+        val cur = started.get()
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+      }
+    } finally sc.removeSparkListener(listener)
+    started.get()
+  }
 }
 
 object SparkSpec {
