@@ -44,8 +44,7 @@ object Staged {
   /** Per-process directory under `java.io.tmpdir` holding every parquet
     * stage; one shutdown hook deletes it when the JVM exits. */
   private[graft] lazy val root: Path = {
-    val r = Files.createTempDirectory(
-      Paths.get(System.getProperty("java.io.tmpdir")), "graft_stage_")
+    val r = Files.createTempDirectory("graft_stage_")
     sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
     r
   }
