@@ -104,34 +104,40 @@ class StagedSpec extends SparkSpec {
     Files.delete(tmpdir)
   }
 
-  private def writeTables(tables: (String, org.apache.spark.sql.DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft-staged-bound").toString
-    tables.foreach { case (name, df) => df.write.parquet(s"$dir/$name.parquet") }
-    dir
+  /** Runs `body` on a temp fixture dir holding `tables`, then deletes it. */
+  private def withTables(tables: (String, org.apache.spark.sql.DataFrame)*)(
+      body: String => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft-staged-bound")
+    try {
+      tables.foreach { case (name, df) => df.write.parquet(s"$dir/$name.parquet") }
+      body(dir.toString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("the trade graph stage fails loudly past |nations|² edges") {
     // 26 nations, one customer and one supplier each, every pair traded
     val ids = spark.range(26).select(col("id"), col("id").cast("int").as("nation"))
-    val dir = writeTables(
+    withTables(
       "customer" -> ids.select(col("id").as("c_custkey"), col("nation").as("c_nationkey")),
       "supplier" -> ids.select(col("id").as("s_suppkey"), col("nation").as("s_nationkey")),
       "orders" -> ids.select(col("id").as("o_orderkey"), col("id").as("o_custkey")),
       "lineitem" -> ids.select(col("id").as("l_orderkey"))
-        .crossJoin(ids.select(col("id").as("l_suppkey"))))
-    val e = intercept[IllegalArgumentException](TradeGraph.directed(spark, dir))
-    assert(e.getMessage.contains("676 edges"), e.getMessage)
+        .crossJoin(ids.select(col("id").as("l_suppkey")))) { dir =>
+      val e = intercept[IllegalArgumentException](TradeGraph.directed(spark, dir))
+      assert(e.getMessage.contains("676 edges"), e.getMessage)
+    }
   }
 
   test("the monthly series stage fails loudly past 4,096 (flag, month) groups") {
     // 3 flags x 1,366 months: 4,097 rows, each its own group
-    val dir = writeTables("lineitem" -> spark.range(4097).select(
+    withTables("lineitem" -> spark.range(4097).select(
       concat(lit("F"), (col("id") % 3).cast("string")).as("l_returnflag"),
       expr("CAST(add_months(DATE'1900-01-01', CAST(id DIV 3 AS INT)) AS TIMESTAMP)")
         .as("l_shipdate"),
-      lit(1.0).as("l_extendedprice"), lit(1.0).as("l_quantity")))
-    val e = intercept[IllegalArgumentException](Evaluate.kendallTau(spark, dir))
-    assert(e.getMessage.contains("4097 rows"), e.getMessage)
+      lit(1.0).as("l_extendedprice"), lit(1.0).as("l_quantity"))) { dir =>
+      val e = intercept[IllegalArgumentException](Evaluate.kendallTau(spark, dir))
+      assert(e.getMessage.contains("4097 rows"), e.getMessage)
+    }
   }
 }
 
