@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.StructType
 /** The one process-wide memo for cross-query stages: relations several
   * registered queries derive from the same fixture dir (the price
   * census, shingle profiles and overlaps, the trade graph, the monthly
-  * series, a staged JDBC table). Each is built once per process and
-  * served to every later caller.
+  * series, a staged JDBC table), and the scratch directories of queries
+  * that round-trip data through files. Each is built once per process
+  * and served to every later caller.
   *
   *  - Key: (stage name, `dir` made absolute and normalized), so `dir`
   *    and `dir/` are one entry. Symlinks are not resolved: a symlinked
@@ -53,6 +54,14 @@ object Staged {
     * racing builders never write to the same files. */
   private[graft] def freshDir(stage: String): String =
     Files.createTempDirectory(root, s"${stage}_").toString
+
+  /** The scratch directory of `stage` for `dir`: a [[freshDir]] on the
+    * first call, the same directory on every later one. For a query
+    * that writes files and reads them back on every call; it gets its
+    * own directory per fixture dir and process, and nothing survives
+    * the JVM. */
+  def scratch(stage: String, dir: String): String =
+    once(stage, dir)(freshDir(stage))
 
   /** A stage materialized as parquet: `write` writes the relation to
     * the path it is given (a [[freshDir]]), once per (stage, dir).

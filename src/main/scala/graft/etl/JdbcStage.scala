@@ -44,9 +44,10 @@ trait JdbcStage {
     * stage would write byte-identical rows — all it adds is wall time
     * (the bench rerun path measured the full write on every rep). A
     * failed write leaves no entry, so the next call retries. Callers
-    * key `dbDir` on the applicationId, so a fresh process never sees a
-    * stale database, and stage one table at a time: two concurrent
-    * first calls for one table would both drop and rewrite it. */
+    * put `dbDir` under a [[graft.Staged.scratch]] dir, so a fresh
+    * process never sees a stale database, and stage one table at a
+    * time: two concurrent first calls for one table would both drop and
+    * rewrite it. */
   def stageOnce(df: DataFrame, dbDir: String, table: String): String =
     graft.Staged.once(s"jdbc $driver $table", dbDir)(stage(df, dbDir, table))
 

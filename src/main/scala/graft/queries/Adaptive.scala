@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructField, StructType}
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.Caches.PersistScoped
 
 /** Round-10 planner/ETL pack: the three runtime-planning surfaces a
@@ -14,19 +14,11 @@ import graft.Caches.PersistScoped
   * idempotent day-partition re-load (the reference's "re-run one
   * day's failed batch" lifecycle as Spark's dynamic
   * partitionOverwriteMode). Conventions per ARCHITECTURE.md
-  * "Cross-engine determinism".
+  * "Cross-engine determinism". The three queries that stage a layout
+  * write it to their own [[Staged]] scratch dir: the oracle never reads
+  * those files (it recomputes from the source tables).
   */
 object Adaptive {
-
-  /** sf-keyed staging dirs, same contract as
-    * [[EtlQueries.ndjsonStageDir]]: the oracle never reads these (it
-    * recomputes from the source tables), but two sf sweeps must not
-    * clobber each other's staged layouts mid-flight. */
-  def dppStageDir(dir: String): String =
-    s"/tmp/graft_dpp_stage_${new java.io.File(dir).getName}"
-
-  def reloadStageDir(dir: String): String =
-    s"/tmp/graft_reload_stage_${new java.io.File(dir).getName}"
 
   /** S14 — dynamic partition pruning: the classic star shape — a fact
     * table staged hive-partitioned by its dim FOREIGN KEY (customers
@@ -46,7 +38,7 @@ object Adaptive {
     * the unstaged tables: pruning must be a pure layout optimization
     * with zero effect on results. */
   def dppJoin(s: SparkSession, dir: String): DataFrame = {
-    val stage = dppStageDir(dir)
+    val stage = Staged.scratch("q_dpp_join", dir)
     val customer = Tables.customer(s, dir)
     customer.write.mode("overwrite").partitionBy("c_nationkey").parquet(stage)
     // explicit reader schema, same reason as EtlQueries.partitionPrune:
@@ -121,7 +113,7 @@ object Adaptive {
     * around the EAGER write and restored in a finally — it never
     * leaks into the session's later queries. */
   def partitionReload(s: SparkSession, dir: String): DataFrame = {
-    val stage = reloadStageDir(dir)
+    val stage = Staged.scratch("q_partition_reload", dir)
     val ev = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
     ev.write.mode("overwrite").partitionBy("day").parquet(stage)
     // re-load day = min(day)+3 — one metadata-scale row; null on
@@ -176,9 +168,6 @@ object Adaptive {
       |  count(DISTINCT user_id) AS n_users, max(event_id) AS max_event_id
       |FROM f GROUP BY day ORDER BY day""".stripMargin
 
-  def driftStageDir(dir: String): String =
-    s"/tmp/graft_drift_stage_${new java.io.File(dir).getName}"
-
   /** E24 — schema-drift union on READ (`mergeSchema`): two staged
     * batches of one logical table disagree — the newer batch added
     * `o_year` and dropped `o_orderpriority` (the additive+subtractive
@@ -192,7 +181,7 @@ object Adaptive {
     * checksum) proves which batch carries which columns and that
     * values survive the merge. */
   def mergeSchemaRead(s: SparkSession, dir: String): DataFrame = {
-    val stage = driftStageDir(dir)
+    val stage = Staged.scratch("q_merge_schema_read", dir)
     val orders = Tables.orders(s, dir)
     orders.write.mode("overwrite").parquet(s"$stage/batch=1")
     orders.withColumn("o_year", year(col("o_orderdate")))

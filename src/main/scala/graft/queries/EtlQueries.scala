@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 import graft.Caches.PersistScoped
 
 /** ETL-parity operators (SURVEY.md §2B E1-E3, F4): the reference's
@@ -317,9 +317,10 @@ object EtlQueries {
     * at planning time (PartitionFilters in the scan node; asserted in
     * EtlSpec) — so the scan cost is proportional to the one selected
     * partition, not the table. The partition column round-trips
-    * through the directory name, not the data files. */
+    * through the directory name, not the data files. Staged in the
+    * query's [[Staged]] scratch dir: the oracle never reads it. */
   def partitionPrune(s: SparkSession, dir: String): DataFrame = {
-    val stage = partitionStageDir(dir)
+    val stage = Staged.scratch("q_partition_prune", dir)
     val orders = Tables.orders(s, dir)
     orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(stage)
     // Read back with the WRITER's schema (data columns, partition
@@ -337,10 +338,6 @@ object EtlQueries {
         col("o_totalprice"), col("o_orderpriority"))
       .orderBy(col("o_orderkey"))
   }
-
-  /** sf-keyed for the same reason as [[ndjsonStageDir]]. */
-  def partitionStageDir(dir: String): String =
-    s"/tmp/graft_part_stage_${new java.io.File(dir).getName}"
 
   /** Oracle reads the ORIGINAL table with the same predicate: pruning
     * must be a pure layout optimization with zero effect on results. */
@@ -401,12 +398,10 @@ object EtlQueries {
     * staged write is a distributed columnar sink — at scale it
     * inherits the same partitioned-write path as the parquet sink. */
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    // Stage path is unique per Spark application: two concurrent JVMs
-    // on the same fixture (bench + verify, parallel suites) must not
-    // race on one directory — overwrite would delete the stage while
-    // the other session reads it back.
-    val stage = s"/tmp/graft_orc_stage_${new java.io.File(dir).getName}" +
-      s"_${s.sparkContext.applicationId}"
+    // the query's own scratch dir: two concurrent JVMs on the same
+    // fixture must not race on one directory (overwrite would delete
+    // the stage while the other session reads it back)
+    val stage = Staged.scratch("q_orc_roundtrip", dir)
     // widen: stage through every core, not the source file's single
     // row-group partition (read-back parallelism = #part files).
     Tables.widen(Tables.lineitem(s, dir)
@@ -442,8 +437,8 @@ object EtlQueries {
     * ORDER BY spans all columns ((orderkey, linenumber) is not
     * unique). */
   def jdbcRanged(s: SparkSession, dir: String): DataFrame = {
-    val dbDir = s"/tmp/graft_derby_${new java.io.File(dir).getName}" +
-      s"_${s.sparkContext.applicationId}/db"
+    // Derby creates the database dir itself: name one that is not there
+    val dbDir = s"${Staged.scratch("q_jdbc_ranged", dir)}/db"
     val staged = Tables.lineitem(s, dir)
       .filter(col("l_orderkey") <= 2000)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -471,13 +466,12 @@ object EtlQueries {
   def jdbcDuckDb(s: SparkSession, dir: String): DataFrame = {
     require(graft.etl.DuckDbStage.ensureLoaded(),
       "duckdb_jdbc jar not found in local artifact caches")
-    val dbDir = s"/tmp/graft_duckdb_${new java.io.File(dir).getName}" +
-      s"_${s.sparkContext.applicationId}"
+    val dbDir = s"${Staged.scratch("q_jdbc_duckdb", dir)}/db"
     val staged = Tables.lineitem(s, dir)
       .filter(col("l_orderkey") <= 2000)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_extendedprice"), col("l_returnflag"))
-    // stage once per session (the dbDir is applicationId-keyed): the
+    // stage once per process (the dbDir is the process's own): the
     // write half of the cycle still runs — and is still measured — on
     // the first execution in any process; repeat executions measure
     // the live strided read-back instead of re-paying an identical
@@ -542,12 +536,10 @@ object EtlQueries {
     * (graft.etl.Compaction), and aggregate the COMPACTED data — the
     * oracle aggregates the original table, so the query proves
     * content-exact rewriting end-to-end. File-count mechanics are
-    * asserted in CompactionSpec; staging is app-unique under /tmp with
-    * the same stale-sweep hygiene as the bucketed-join stage. */
+    * asserted in CompactionSpec; both copies live in the query's
+    * [[Staged]] scratch dir. */
   def compaction(s: SparkSession, dir: String): DataFrame = {
-    val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    graft.etl.Staging.sweepStale("graft_compact_", app)
-    val stage = s"/tmp/graft_compact_${new java.io.File(dir).getName}_$app"
+    val stage = Staged.scratch("q_compaction", dir)
     Tables.orders(s, dir).repartition(64)
       .write.mode("overwrite").parquet(s"$stage/fragmented")
     graft.etl.Compaction.compact(s, s"$stage/fragmented", s"$stage/compacted",
@@ -607,12 +599,10 @@ object EtlQueries {
     * every line byte-for-byte (count + distinct + total chars). Lines
     * lose their source ordering in the round trip by design, so the
     * output is the order-free aggregate; newline-free fixture text
-    * keeps the line↔document bijection exact. Staged under the same
-    * app-unique /tmp hygiene as the other transports. */
+    * keeps the line↔document bijection exact. Staged in the query's
+    * [[Staged]] scratch dir, like the other transports. */
   def textLinesRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    graft.etl.Staging.sweepStale("graft_textlines_", app)
-    val stage = s"/tmp/graft_textlines_${new java.io.File(dir).getName}_$app"
+    val stage = Staged.scratch("q_text_lines_roundtrip", dir)
     Tables.documents(s, dir).select(col("text"))
       .write.mode("overwrite").option("compression", "gzip").text(stage)
     s.read.text(stage)
@@ -737,8 +727,7 @@ object EtlQueries {
   /** The ORACLE-visible path: a pid-agnostic SYMLINK published once the
     * frontier loop's final snapshot is committed. The actual writes go
     * to [[rangeSinkWorkDir]] (pid-keyed), so two concurrent processes
-    * on one fixture (the Verify+Bench-in-one-session scenario
-    * ShingleStage pid-isolates against) never clear each other's
+    * on one fixture (Verify and Bench at once) never clear each other's
     * staged files mid-run; the loop's contents are deterministic, so
     * whichever process publishes last leaves identical bytes behind
     * the link. */
@@ -749,17 +738,16 @@ object EtlQueries {
     s"${rangeSinkStageDir(dir)}_work_${java.lang.ProcessHandle.current().pid()}"
 
   /** Atomically point the published symlink at this process's work
-    * dir: stage the link under a pid-unique name, then one ATOMIC_MOVE
-    * replaces whatever was published before — readers (the DuckDB
-    * oracle's csv glob) always resolve a complete snapshot. */
+    * dir: stage the link next to the (pid-keyed) work dir, then one
+    * ATOMIC_MOVE replaces whatever was published before — readers (the
+    * DuckDB oracle's csv glob) always resolve a complete snapshot. */
   private def publishDir(work: String, publish: String): Unit = {
     val p = java.nio.file.Paths.get(publish)
     // migration from the pre-symlink layout: a REAL directory at the
     // publish path can't be atomically replaced by a link — clear it
     if (java.nio.file.Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS))
       clearDir(publish)
-    val tmp = java.nio.file.Paths.get(
-      s"$publish.swap-${java.lang.ProcessHandle.current().pid()}")
+    val tmp = java.nio.file.Paths.get(s"$work.link")
     java.nio.file.Files.deleteIfExists(tmp)
     java.nio.file.Files.createSymbolicLink(tmp, java.nio.file.Paths.get(work))
     java.nio.file.Files.move(tmp, p,

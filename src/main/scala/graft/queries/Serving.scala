@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Staged, Tables}
 
 /** Round-6 serving/feature-store operators: shuffle-free bucketed
   * co-located joins, point-in-time-correct dimension lookup, algebraic
@@ -21,21 +21,14 @@ object Serving {
     * re-shuffling terabytes per query and a zero-exchange merge of
     * co-located files; BucketingSpec + ServingSpec assert the executed
     * plan contains no ShuffleExchange below the join. The staged
-    * tables are external (app-id-unique /tmp path — two concurrent
-    * JVMs must not race one directory), and results are identical to
-    * the plain join, which is the oracle. */
+    * tables are external, written to the query's [[Staged]]
+    * scratch dir (rewritten in place on every call; the catalog entries
+    * live in the session's in-memory catalog), and results are
+    * identical to the plain join, which is the oracle. */
   def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    // Hygiene: stage dirs are app-id-unique (two concurrent JVMs must
-    // not race one directory), so dirs from DEAD apps would otherwise
-    // accumulate in /tmp forever — sweep other apps' stale ones
-    // (graft.etl.Staging policy). Within a session the same two
-    // tables/paths are overwritten, not duplicated, and the catalog
-    // entries die with the session's in-memory catalog.
-    graft.etl.Staging.sweepStale("graft_bucket_stage_", app)
-    val stage = s"/tmp/graft_bucket_stage_${new java.io.File(dir).getName}_$app"
-    val ot = s"graft_orders_bkt_$app"
-    val ct = s"graft_customer_bkt_$app"
+    val stage = Staged.scratch("q_bucketed_join", dir)
+    val ot = "graft_orders_bkt"
+    val ct = "graft_customer_bkt"
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .write.mode("overwrite").format("parquet")
@@ -72,11 +65,11 @@ object Serving {
     * with bucketed layouts this is the difference between scanning
     * 1/8th of a 100 TB table and all of it, before row-group stats
     * even apply. Results are identical to the plain filtered scan,
-    * which is the oracle. */
+    * which is the oracle. The layout is staged in the query's
+    * [[Staged]] scratch dir. */
   def bucketPrune(s: SparkSession, dir: String): DataFrame = {
-    val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-    val stage = s"/tmp/graft_bucket_stage_${new java.io.File(dir).getName}_$app"
-    val t = s"graft_orders_prune_$app"
+    val stage = Staged.scratch("q_bucket_prune", dir)
+    val t = "graft_orders_prune"
     Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .write.mode("overwrite").format("parquet")

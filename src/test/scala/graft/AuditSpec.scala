@@ -93,7 +93,7 @@ class AuditSpec extends SparkSpec {
     // the routine 100 TB event (pruned incremental day) must read as a
     // clean pass — a NULL-poisoned sum flipping `passed` to 0 would
     // block a healthy load at the scheduler gate
-    val dir = java.nio.file.Files.createTempDirectory("graft_exp_empty").toString
+    val dir = tempDir("graft_exp_empty")
     Seq("lineitem", "orders").foreach { n =>
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
           Tables.load(spark, sfDir, n).schema)

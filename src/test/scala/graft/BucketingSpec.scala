@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("date-partitioned layout prunes partitions at the scan") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part")
     Tables.orders(spark, sfDir)
       .withColumn("order_year", year(col("o_orderdate")))
       .write.partitionBy("order_year").parquet(s"$out/orders_p")

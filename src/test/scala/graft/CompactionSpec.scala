@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.etl.Compaction
 
@@ -10,7 +9,7 @@ import graft.etl.Compaction
 class CompactionSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-compact").toString
+    tempDir("graft-compact")
 
   test("compaction collapses a fragmented directory and preserves content") {
     val out = tmp()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.etl.{DuckDbStage, IncrementalRunner, ParquetRangeSink, StateStore}
 
@@ -18,7 +17,7 @@ import graft.etl.{DuckDbStage, IncrementalRunner, ParquetRangeSink, StateStore}
 class DuckDbStageSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-duckdb").toString
+    tempDir("graft-duckdb")
 
   private def live: Boolean = DuckDbStage.ensureLoaded()
 

@@ -25,14 +25,11 @@ import org.apache.spark.sql.types.StructType
   */
 class EmptyInputSpec extends SparkSpec {
 
-  private val emptyDir = "/tmp/graft_empty_sf"
+  // a fixed dir name: the oracle-read stages are keyed by it
+  private lazy val emptyDir = s"${tempDir("graft-empty")}/graft_empty_sf"
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    val fs = java.nio.file.Paths.get(emptyDir)
-    // rebuild every run: cheap (10 empty files) and immune to stale
-    // schemas from an older checkout
-    org.apache.commons.io.FileUtils.deleteQuietly(fs.toFile)
     Tables.names.foreach { n =>
       // events: the on-disk fixture is TIMESTAMP(NANOS), which plain
       // spark.read can't produce; take the POST-conversion schema from

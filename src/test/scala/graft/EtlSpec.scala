@@ -11,7 +11,7 @@ import graft.etl.{BatchRecord, Identifiers, IncrementalRunner, JdbcRangedSource,
 class EtlSpec extends SparkSpec {
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-etl").toString
+    tempDir("graft-etl")
 
   test("state store: upsert is keyed, versions survive re-read") {
     val st = new StateStore(spark, tmp())

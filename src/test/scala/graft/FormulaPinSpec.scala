@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 /** Pins closed-form statistics and graph algorithms to EXTERNAL ground
@@ -21,7 +19,7 @@ class FormulaPinSpec extends SparkSpec {
   /** Write one table into a fresh fixture dir. Returns the dir; call
     * again with the same dir to add further tables. */
   private def fixture(tables: (String, DataFrame)*): String = {
-    val dir = Files.createTempDirectory("formulapin").toString
+    val dir = tempDir("formulapin")
     tables.foreach { case (name, df) =>
       df.coalesce(1).write.parquet(s"$dir/$name.parquet")
     }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Pins the inference pack's statistics to externally-known values on
   * crafted fixtures — the guard the oracle gate structurally cannot
   * provide when the DuckDB SQL mirrors the same formula (the round-13
@@ -12,7 +10,7 @@ class InferSpec extends SparkSpec {
   import spark.implicits._
 
   private def kwFixture(rows: Seq[(String, Long)]): String = {
-    val dir = Files.createTempDirectory("kwfix").toString
+    val dir = tempDir("kwfix")
     rows.toDF("l_returnflag", "l_quantity")
       .coalesce(1).write.parquet(s"$dir/lineitem.parquet")
     dir

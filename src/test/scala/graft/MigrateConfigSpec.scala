@@ -6,7 +6,7 @@ import graft.etl.{MigrateApp, MigrateConfig}
 /** The YAML config front door (ref A13): the supported subset parses
   * exactly, env templating interpolates or fails loudly, and
   * MigrateApp resolves identical arguments from either style. */
-class MigrateConfigSpec extends AnyFunSuite {
+class MigrateConfigSpec extends AnyFunSuite with TempDirs {
 
   private val sample =
     """# migbqspark config (reference-style in/out sections)
@@ -50,7 +50,7 @@ class MigrateConfigSpec extends AnyFunSuite {
   }
 
   test("MigrateApp resolves the same args from CLI and config styles") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cfg")
+    val dir = java.nio.file.Paths.get(tempDir("graft_cfg"))
     val f = dir.resolve("job.yml")
     java.nio.file.Files.writeString(f,
       """in:

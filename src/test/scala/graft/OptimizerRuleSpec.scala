@@ -53,7 +53,7 @@ class OptimizerRuleSpec extends SparkSpec {
     // would never fire and the test would only exercise the builtin.
     import spark.implicits._
     GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lev").toString
+    val dir = tempDir("graft-lev")
     Seq(
       (1L, "kitten", "sitting"),        // dist 3 (== k boundary)
       (2L, "abc", "abcdefgh"),          // gap 5 > 3 — guard kills it

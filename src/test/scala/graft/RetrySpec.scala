@@ -161,7 +161,7 @@ class RetrySpec extends SparkSpec {
   }
 
   test("parquet commit discards failed attempts: no loss, no duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_retry_w").toString
+    val dir = tempDir("graft_retry_w")
     val out = s"$dir/t.parquet"
     val src = Tables.load(spark, sfDir, "nation")
     flaky(src.repartition(4, col("n_nationkey"))).write.mode("overwrite").parquet(out)

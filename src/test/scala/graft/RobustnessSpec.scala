@@ -74,7 +74,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("incremental runner on an empty source is a no-op") {
-    val out = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val out = tempDir("graft-empty")
     val src = Tables.orders(spark, sfDir).filter(col("o_orderkey") < 0)
     val runner = new graft.etl.IncrementalRunner(spark,
       new graft.etl.StateStore(spark, s"$out/state"),

@@ -89,8 +89,7 @@ class SimilaritySpec extends SparkSpec {
   test("persistent IVF-PQ index: search-from-disk equals the self-contained build bit for bit") {
     val emb = Tables.embeddings(spark, sfDir)
     val probes = emb.filter(col("vec_id") < 10)
-    val dir = "/tmp/graft_ivfpq_index_spec"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = s"${tempDir("graft-ivfpq")}/index"
     Similarity.buildIndex(emb, dir)
     // the inverted lists are at rest as one directory per cid —
     // the layout a probed search prunes to nprobe directories of

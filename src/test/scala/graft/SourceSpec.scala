@@ -92,8 +92,7 @@ class SourceSpec extends SparkSpec {
   }
 
   test("streaming restart resumes from the checkpointed frontier (A12 resume)") {
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-range-ckpt").toString
+    val ckpt = tempDir("graft-range-ckpt")
     // keyed by batchId — the idempotent-sink discipline, so a replayed
     // trailing batch after the kill cannot double-count
     val seen = scala.collection.concurrent.TrieMap.empty[Long, Array[Long]]
@@ -135,7 +134,7 @@ class SourceSpec extends SparkSpec {
   // -------------------------------------------------------------------
 
   private def sinkDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-range-sink").toString
+    tempDir("graft-range-sink")
 
   private def sinkRead(path: String): DataFrame =
     spark.read.format("graft.sources.RangeSource").option("path", path).load()
@@ -232,8 +231,7 @@ class SourceSpec extends SparkSpec {
 
   test("streaming sink: source→sink stream is exactly-once across a crash (X18)") {
     val path = sinkDir()
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-sink-ckpt").toString
+    val ckpt = tempDir("graft-sink-ckpt")
     // a foreachBatch wrapper injects the crash AFTER the sink committed
     // batch 1 but BEFORE the offset log records it — the classic
     // in-doubt window Structured Streaming resolves by REPLAYING the
@@ -273,8 +271,7 @@ class SourceSpec extends SparkSpec {
     // the DIRECT streaming sink path: epoch-idempotent commits make
     // the same crash exactly-once without caller-side dedup
     val path2 = sinkDir()
-    val ckpt2 = java.nio.file.Files
-      .createTempDirectory("graft-sink-ckpt2").toString
+    val ckpt2 = tempDir("graft-sink-ckpt2")
     def runDirect(): Unit = {
       val q = spark.readStream.format("graft.sources.RangeSource")
         .option("lo", "0").option("hi", "6000")

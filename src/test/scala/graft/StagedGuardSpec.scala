@@ -4,10 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan guard: cross-query stages under the query, operator and
-  * etl packages memoize through [[Staged]] only, so no hand-rolled
-  * concurrent memo map (with its own lock discipline and key rule)
-  * comes back. */
+/** Source-scan guards over the query, operator and etl packages:
+  * cross-query stages memoize through [[Staged]] only, so no
+  * hand-rolled concurrent memo map (with its own lock discipline and
+  * key rule) comes back, and scratch directories come from
+  * [[Staged.scratch]], so no hand-built `/tmp` path (keyed by an
+  * application id, a pid or a fixture name) comes back. */
 class StagedGuardSpec extends AnyFunSuite {
 
   private val roots = Seq("queries", "operators", "etl")
@@ -20,14 +22,45 @@ class StagedGuardSpec extends AnyFunSuite {
     finally stream.close()
   }
 
-  test("no memo map outside Staged in queries/, operators/ or etl/") {
+  private def lines(): Seq[(Path, String, Int)] = {
     val files = roots.flatMap(sources)
     assert(files.size > 40, s"scanned only ${files.size} files — wrong working dir?")
+    for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.toSeq.zipWithIndex
+    } yield (f, line, i + 1)
+  }
+
+  test("no memo map outside Staged in queries/, operators/ or etl/") {
     val hits = for {
-      f <- files if f.getFileName.toString != "Staged.scala"
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      (f, line, n) <- lines() if f.getFileName.toString != "Staged.scala"
       m <- banned.findFirstIn(line)
-    } yield s"$f:${i + 1}: $m"
+    } yield s"$f:$n: $m"
     assert(hits.isEmpty, s"memo maps outside Staged:\n${hits.mkString("\n")}")
+  }
+
+  private val scratchBanned = "\"/tmp|applicationId|ProcessHandle".r
+
+  /** Fragments of the only lines that may still name `/tmp` or the
+    * process: the three stages the DuckDB oracle reads after the JVM
+    * has exited, so they cannot sit under the per-process root (each
+    * keyed by the fixture dir's name; the range sink writes to a
+    * pid-keyed work dir behind its published link), and Derby's error
+    * log. */
+  private val allowed = Seq(
+    "s\"/tmp/graft_ndjson_stage_${",
+    "s\"/tmp/graft_csvhostile_stage_${",
+    "s\"/tmp/graft_rangesink_stage_${",
+    "s\"${rangeSinkStageDir(dir)}_work_${java.lang.ProcessHandle",
+    "\"derby.stream.error.file\", \"/tmp/graft_derby.log\"")
+
+  test("no hand-built /tmp, application-id or pid path in queries/, operators/ or etl/") {
+    val hits = lines().filter { case (_, line, _) => scratchBanned.findFirstIn(line).nonEmpty }
+    val bad = hits.filterNot { case (_, line, _) => allowed.exists(line.contains) }
+    assert(bad.isEmpty, "scratch paths outside Staged.scratch:\n" +
+      bad.map { case (f, line, n) => s"$f:$n: ${line.trim}" }.mkString("\n"))
+    // every allow-list entry still names a line, so the list cannot rot
+    val unused = allowed.filterNot(a => hits.exists(_._2.contains(a)))
+    assert(unused.isEmpty, s"allow-list entries that match no line: $unused")
   }
 }

@@ -89,7 +89,7 @@ class StagedSpec extends SparkSpec {
   }
 
   test("a child JVM that creates the root leaves no root behind after it exits") {
-    val tmpdir = Files.createTempDirectory("graft-staged-child")
+    val tmpdir = Paths.get(tempDir("graft-staged-child"))
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cmd = java.util.Arrays.asList(javaBin, "-Xmx256m", s"-Djava.io.tmpdir=$tmpdir",
       "-cp", System.getProperty("java.class.path"), "graft.StagedRootChild")
@@ -101,17 +101,14 @@ class StagedSpec extends SparkSpec {
     assert(stage.getParent.getParent == tmpdir, s"stage $stage not under $tmpdir")
     assert(!Files.exists(stage.getParent), s"root ${stage.getParent} survived the child")
     assert(tmpdir.toFile.list().isEmpty)
-    Files.delete(tmpdir)
   }
 
-  /** Runs `body` on a temp fixture dir holding `tables`, then deletes it. */
+  /** Runs `body` on a temp fixture dir holding `tables`. */
   private def withTables(tables: (String, org.apache.spark.sql.DataFrame)*)(
       body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-staged-bound")
-    try {
-      tables.foreach { case (name, df) => df.write.parquet(s"$dir/$name.parquet") }
-      body(dir.toString)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    val dir = tempDir("graft-staged-bound")
+    tables.foreach { case (name, df) => df.write.parquet(s"$dir/$name.parquet") }
+    body(dir)
   }
 
   test("the trade graph stage fails loudly past |nations|² edges") {

@@ -91,7 +91,7 @@ class StateBackendSpec extends SparkSpec {
   import graft.etl.{BatchRecord, ManifestStateStore, StateStore}
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-state").toString
+    tempDir("graft-state")
 
   private def rec(lo: Long, hi: Long, st: String, run: Long) =
     BatchRecord("t", lo, hi, hi - lo, st, run)

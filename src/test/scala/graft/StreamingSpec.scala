@@ -60,8 +60,8 @@ class StreamingSpec extends SparkSpec {
   test("idempotent batch sink: re-writing a batch overwrites instead of duplicating") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val base = tempDir("graft-sink")
+    val ckpt = tempDir("graft-ckpt")
     val stream = MemoryStream[EventRow]
     stream.addData(mkEvents((1, 0, 1, "a", 1.0), (2, 5, 2, "b", 2.0)))
     val q1 = EventStreams.idempotentBatchSink(stream.toDF(), base, ckpt)
@@ -495,7 +495,7 @@ class StreamingSpec extends SparkSpec {
     // both finalize identically.
     val flush1 = mkEvents((8, 6000, 3, "flush", 0.0))
     val flush2 = mkEvents((9, 7000, 3, "flush", 0.0))
-    val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val base = tempDir("graft-restart")
     // interrupted path: run, STOP, add data, restart from checkpoint
     writeBatch(s"$base/src/p1", phase1)
     runOnce(s"$base/src/*", s"$base/out", s"$base/ckpt")
@@ -523,7 +523,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("syncAvailableNow drains new files into the destination (A12 sync)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sync").toString
+    val base = tempDir("graft-sync")
     val src = Tables.orders(spark, sfDir)
     src.filter(col("o_orderkey") < 500).write.parquet(s"$base/in/p1")
     // first drain

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference's sync loop recovers from. Asserts end-to-end
   * exactly-once by manifest content (one entry set per epoch) and by
   * row coverage of the committed part files. */
-class ProcessKillSpec extends AnyFunSuite {
+class ProcessKillSpec extends AnyFunSuite with graft.TempDirs {
 
   private val addOpens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -45,9 +45,9 @@ class ProcessKillSpec extends AnyFunSuite {
   }
 
   test("kill -9 mid-stream, restart from the checkpoint -> exactly-once end to end") {
-    val sink = Files.createTempDirectory("graft-pkill-sink").toString
-    val ckpt = Files.createTempDirectory("graft-pkill-ckpt").toString
-    val log = Files.createTempFile("graft-pkill", ".log").toFile
+    val sink = tempDir("graft-pkill-sink")
+    val ckpt = tempDir("graft-pkill-ckpt")
+    val log = new java.io.File(tempDir("graft-pkill-log"), "child.log")
 
     // phase 1: the child halts itself after 2 non-empty batches —
     // abrupt process death with epochs still outstanding

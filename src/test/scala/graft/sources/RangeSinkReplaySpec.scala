@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * StreamingWrite surface: a replayed epoch's commit must be a no-op
   * that also cleans its staged temps, and a NEW epoch after the
   * replay must commit normally. */
-class RangeSinkReplaySpec extends AnyFunSuite {
+class RangeSinkReplaySpec extends AnyFunSuite with graft.TempDirs {
 
   private def stageTemp(path: String, epoch: Long, partition: Int,
                         rows: Seq[(Long, Long, Int)]): RangeFileCommit = {
@@ -30,7 +30,7 @@ class RangeSinkReplaySpec extends AnyFunSuite {
         .asScala.toSeq)
 
   test("a replayed epoch commit is a no-op that drops its staged temps") {
-    val path = Files.createTempDirectory("graft-sink-replay").toString
+    val path = tempDir("graft-sink-replay")
     val sw = new RangeFileStreamingWrite(path)
     // epoch 0 commits normally
     sw.commit(0L, Array(stageTemp(path, 0L, 0, Seq((1L, 10L, 1), (2L, 20L, 2)))))
@@ -52,7 +52,7 @@ class RangeSinkReplaySpec extends AnyFunSuite {
   }
 
   test("replay after a crash between rename and manifest publish recovers") {
-    val path = Files.createTempDirectory("graft-sink-crashwin").toString
+    val path = tempDir("graft-sink-crashwin")
     val sw = new RangeFileStreamingWrite(path)
     sw.commit(0L, Array(stageTemp(path, 0L, 0, Seq((1L, 10L, 1)))))
     // simulate the in-doubt crash window for epoch 1: the driver
@@ -77,7 +77,7 @@ class RangeSinkReplaySpec extends AnyFunSuite {
   }
 
   test("manifest aggregate stats reflect streaming commits") {
-    val path = Files.createTempDirectory("graft-sink-replay2").toString
+    val path = tempDir("graft-sink-replay2")
     val sw = new RangeFileStreamingWrite(path)
     sw.commit(0L, Array(stageTemp(path, 0L, 0, Seq((5L, 1L, 5), (9L, 2L, 9)))))
     sw.commit(1L, Array(stageTemp(path, 1L, 0, Seq((7L, 3L, 7)))))
