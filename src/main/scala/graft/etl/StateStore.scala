@@ -45,7 +45,8 @@ trait BatchState {
   * state path stays tiny (a million batches ≈ a few MB).
   *
   * Each version is one parquet file written and read on the driver
-  * through parquet-hadoop, so state I/O runs no Spark job. The schema
+  * through parquet-hadoop (written through its local-file API, with no
+  * `.crc` file), so state I/O runs no Spark job. The schema
   * is the one Spark writes for [[BatchRecord]], so versions written by
   * `Dataset.write.parquet` read back unchanged, and Spark can read the
   * versions written here. The last committed or
@@ -132,6 +133,7 @@ private object StateStore {
   import org.apache.parquet.example.data.simple.SimpleGroupFactory
   import org.apache.parquet.hadoop.ParquetReader
   import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+  import org.apache.parquet.io.LocalOutputFile
   import org.apache.parquet.schema.MessageTypeParser
   import scala.jdk.CollectionConverters._
 
@@ -147,10 +149,14 @@ private object StateStore {
       |  required int64 runId;
       |}""".stripMargin)
 
+  /** Writes `recs` as `dir/part-00000.parquet` through `java.nio`
+    * (no `.crc` file and no forked `chmod`, which Hadoop's local file
+    * system adds per file) with the store's Hadoop conf, so no new
+    * `Configuration` is parsed. */
   def writeVersion(conf: Configuration, dir: Path,
                    recs: Seq[BatchRecord]): Unit = {
     val groups = new SimpleGroupFactory(schema)
-    val w = ExampleParquetWriter.builder(new HPath(dir.resolve("part-00000.parquet").toUri))
+    val w = ExampleParquetWriter.builder(new LocalOutputFile(dir.resolve("part-00000.parquet")))
       .withConf(conf).withType(schema).build()
     try recs.foreach { r =>
       w.write(groups.newGroup().append("table", r.table).append("pkLower", r.pkLower)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Staged, Tables}
 import graft.Caches.PersistScoped
+import scala.jdk.CollectionConverters._
 
 /** ETL-parity operators (SURVEY.md §2B E1-E3, F4): the reference's
   * type-mapping cast pipeline (A7), its count-compare validation
@@ -740,7 +741,10 @@ object EtlQueries {
   /** Atomically point the published symlink at this process's work
     * dir: stage the link next to the (pid-keyed) work dir, then one
     * ATOMIC_MOVE replaces whatever was published before — readers (the
-    * DuckDB oracle's csv glob) always resolve a complete snapshot. */
+    * DuckDB oracle's csv glob) always resolve a complete snapshot.
+    * Once the link has moved, the work dirs of exited processes that
+    * it does not point at are deleted, so at most one stale snapshot
+    * per fixture outlives its process. */
   private def publishDir(work: String, publish: String): Unit = {
     val p = java.nio.file.Paths.get(publish)
     // migration from the pre-symlink layout: a REAL directory at the
@@ -753,6 +757,16 @@ object EtlQueries {
     java.nio.file.Files.move(tmp, p,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val linked = p.getParent.resolve(java.nio.file.Files.readSymbolicLink(p))
+    val workName = s"${java.util.regex.Pattern.quote(p.getFileName.toString)}_work_(\\d+)".r
+    val siblings = java.nio.file.Files.list(p.getParent)
+    try siblings.iterator().asScala.foreach { d =>
+      d.getFileName.toString match {
+        case workName(pid) if d != linked &&
+            !java.lang.ProcessHandle.of(pid.toLong).isPresent => clearDir(d.toString)
+        case _ =>
+      }
+    } finally siblings.close()
   }
 
   /** Reset the sink staging dir (fresh snapshot per run, so the

@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-scan guards over the query, operator and etl packages:
   * cross-query stages memoize through [[Staged]] only, so no
   * hand-rolled concurrent memo map (with its own lock discipline and
-  * key rule) comes back, and scratch directories come from
+  * key rule) comes back, scratch directories come from
   * [[Staged.scratch]], so no hand-built `/tmp` path (keyed by an
-  * application id, a pid or a fixture name) comes back. */
+  * application id, a pid or a fixture name) comes back, and every
+  * parquet reader or writer the migration path opens reuses a Hadoop
+  * conf, so no per-file `Configuration` parse comes back. */
 class StagedGuardSpec extends AnyFunSuite {
 
   private val roots = Seq("queries", "operators", "etl")
@@ -45,13 +47,14 @@ class StagedGuardSpec extends AnyFunSuite {
     * process: the three stages the DuckDB oracle reads after the JVM
     * has exited, so they cannot sit under the per-process root (each
     * keyed by the fixture dir's name; the range sink writes to a
-    * pid-keyed work dir behind its published link), and Derby's error
-    * log. */
+    * pid-keyed work dir behind its published link and deletes those of
+    * exited processes), and Derby's error log. */
   private val allowed = Seq(
     "s\"/tmp/graft_ndjson_stage_${",
     "s\"/tmp/graft_csvhostile_stage_${",
     "s\"/tmp/graft_rangesink_stage_${",
     "s\"${rangeSinkStageDir(dir)}_work_${java.lang.ProcessHandle",
+    "!java.lang.ProcessHandle.of(pid.toLong).isPresent => clearDir(d.toString)",
     "\"derby.stream.error.file\", \"/tmp/graft_derby.log\"")
 
   test("no hand-built /tmp, application-id or pid path in queries/, operators/ or etl/") {
@@ -62,5 +65,47 @@ class StagedGuardSpec extends AnyFunSuite {
     // every allow-list entry still names a line, so the list cannot rot
     val unused = allowed.filterNot(a => hits.exists(_._2.contains(a)))
     assert(unused.isEmpty, s"allow-list entries that match no line: $unused")
+  }
+
+  private val parquetOpen =
+    """ParquetFileReader\.open\(|ParquetReader\.builder\(|ExampleParquetWriter\.builder\(""".r
+
+  /** Whether the call whose `(` ends at `from` has a comma outside any
+    * nested parentheses, that is, more than one argument. */
+  private def twoArgs(text: String, from: Int): Boolean = {
+    var depth = 1
+    var i = from
+    var comma = false
+    while (depth > 0 && i < text.length) {
+      text(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1
+        case ',' if depth == 1 => comma = true
+        case _ =>
+      }
+      i += 1
+    }
+    comma
+  }
+
+  test("every parquet reader or writer under etl/ is given read options or a conf") {
+    // without them parquet builds a new Configuration per file, which
+    // re-parses Hadoop's default resources (about 11 ms a footer)
+    val calls = for {
+      f <- sources(Paths.get("src/main/scala/graft/etl"))
+      text = new String(Files.readAllBytes(f), "UTF-8")
+      m <- parquetOpen.findAllMatchIn(text)
+    } yield {
+      val ok =
+        if (m.matched.startsWith("ParquetFileReader")) twoArgs(text, m.end)
+        else {
+          val end = text.indexOf(".build()", m.end)
+          end > 0 && text.substring(m.end, end).contains(".withConf(")
+        }
+      (s"$f:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}", ok)
+    }
+    assert(calls.size >= 3, s"found only ${calls.map(_._1)} — wrong working dir?")
+    val bad = calls.filterNot(_._2).map(_._1)
+    assert(bad.isEmpty, s"parquet calls without read options or a conf:\n${bad.mkString("\n")}")
   }
 }

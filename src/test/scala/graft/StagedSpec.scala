@@ -90,10 +90,8 @@ class StagedSpec extends SparkSpec {
 
   test("a child JVM that creates the root leaves no root behind after it exits") {
     val tmpdir = Paths.get(tempDir("graft-staged-child"))
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cmd = java.util.Arrays.asList(javaBin, "-Xmx256m", s"-Djava.io.tmpdir=$tmpdir",
-      "-cp", System.getProperty("java.class.path"), "graft.StagedRootChild")
-    val p = new ProcessBuilder(cmd).redirectErrorStream(true).start()
+    val cmd = ChildJvm.command(Seq("-Xmx256m", s"-Djava.io.tmpdir=$tmpdir"), "graft.StagedRootChild")
+    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
     assert(p.waitFor(120, TimeUnit.SECONDS), "child timed out")
     assert(p.exitValue() == 0, s"child failed:\n$out")

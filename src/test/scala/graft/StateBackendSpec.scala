@@ -130,6 +130,24 @@ class StateBackendSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/v=1").as[BatchRecord].collect().toSeq == want)
   }
 
+  test("state store versions have no .crc file, read back through Spark and continue") {
+    import spark.implicits._
+    val dir = tmp()
+    val first = Seq(rec(-1, 10, "DONE", 1), rec(10, 20, "ERROR", 2))
+    new StateStore(spark, dir).upsert(first)
+    val v0 = java.nio.file.Paths.get(dir, "v=0")
+    val names = v0.toFile.list().toSeq.sorted
+    assert(names == Seq("_COMMITTED", "part-00000.parquet"), names)
+    assert(spark.read.parquet(v0.toString).as[BatchRecord].collect().toSeq == first)
+    // a new instance reads v=0 from disk and the next upsert builds on it
+    val next = new StateStore(spark, dir)
+    next.upsert(Seq(rec(10, 20, "DONE", 3), rec(20, 30, "DONE", 3)))
+    val want = Seq(rec(-1, 10, "DONE", 1), rec(10, 20, "DONE", 3), rec(20, 30, "DONE", 3))
+    assert(next.currentVersion == 1L && new StateStore(spark, dir).read() == want)
+    assert(spark.read.parquet(s"$dir/v=1").as[BatchRecord].collect().toSeq == want)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "v=1", ".part-00000.parquet.crc")))
+  }
+
   test("state store: two instances on one dir each see the other's commit") {
     val dir = tmp()
     val a = new StateStore(spark, dir)

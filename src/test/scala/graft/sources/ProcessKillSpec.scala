@@ -19,25 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * row coverage of the committed part files. */
 class ProcessKillSpec extends AnyFunSuite with graft.TempDirs {
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def launch(sink: String, ckpt: String, haltAfter: Int,
                      log: java.io.File): Process = {
-    val java = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val cmd = Seq(java) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.sources.StreamKillChild",
-      sink, ckpt, haltAfter.toString)
+    val cmd = graft.ChildJvm.command(
+      Seq("-Xmx2g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"),
+      "graft.sources.StreamKillChild", sink, ckpt, haltAfter.toString)
     new ProcessBuilder(cmd.asJava)
       .redirectErrorStream(true)
       .redirectOutput(log)
