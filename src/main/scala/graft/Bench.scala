@@ -194,33 +194,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle width is sized to the DATA (sub-GB at bench scale), not
-    // to the thread count: AQE coalesces small shuffles anyway, and
-    // 32-way shuffles of KB-sized partitions pay pure scheduling
-    // overhead. Scans still use every core (maxPartitionBytes governs
-    // them); override via SPARK_GRAFT_SHUFFLE for bigger inputs.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      // uniform for the whole sweep (q_bucket_prune needs it OFF, and a
-      // mid-sweep session-conf flip would make later plans order-dependent)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.sweep()
     // Untimed warm-up: JVM/codegen/session init and parquet footer reads
     // otherwise land entirely on whichever query happens to run first.
-    Tables.names.foreach { n =>
-      try {
-        val df = if (n == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, n)
-        df.count()
-      } catch { case _: Throwable => }
-    }
+    Tables.warm(spark, sfDir)
     try queries.Relational.pricingSummary(spark, sfDir).count()
     catch { case _: Throwable => }
     // UDF machinery has a one-time init cost (~1s) that would otherwise be

@@ -1,15 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only timing loop: runs the named queries N times each under the
-  * exact Bench session config and prints every run's wall — the warm
-  * repeats expose steady-state cost (what a perf change moves) without
-  * a full sweep. Not a driver surface; Bench remains the official
-  * measurement (probes, self-correction, history).
+  * Bench session ([[Session.sweep]]) and prints every run's wall — the
+  * warm repeats expose steady-state cost (what a perf change moves)
+  * without a full sweep. Between runs it drains scoped caches and
+  * clears the cache, like Bench's timed loop. Not a driver surface;
+  * Bench remains the official measurement (probes, self-correction,
+  * history).
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *        sbt "runMain graft.Dev q_kcore q_hits [reps]"
+  *
+  * Each run prints `wall(c<cpu s>,g<gc s>)`; reps defaults to 3.
   */
 object Dev {
   def main(args: Array[String]): Unit = {
@@ -21,24 +23,8 @@ object Dev {
       s"at most one rep-count argument, got: ${repArgs.mkString(", ")}")
     val reps = repArgs.headOption.map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { n =>
-      try {
-        val df = if (n == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, n)
-        df.count()
-      } catch { case _: Throwable => }
-    }
+    val spark = Session.sweep()
+    Tables.warm(spark, sfDir)
     names.foreach { q =>
       val fn = SparkEntry.queries.getOrElse(q,
         sys.error(s"unknown query $q"))
@@ -49,6 +35,8 @@ object Dev {
         fn(spark, sfDir).collect()
         val w = (System.nanoTime() - t0) / 1e9
         val s1 = Bench.snapshot()
+        try { Caches.drain(); spark.catalog.clearCache() }
+        catch { case _: Throwable => }
         f"$w%.2f(c${s1._1 - s0._1}%.1f,g${s1._2 - s0._2}%.1f)"
       }
       println(f"[dev] $q%-28s ${walls.mkString(" ")}  probe=${probe}%.0fms")

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: dumps `explain("formatted")` for the queries
   * whose plan shape carries the scale argument (pushdown, broadcast,
   * partial aggregation, map-only stages, TakeOrderedAndProject), so
-  * the claimed shapes can be read and diffed, not just asserted.
+  * the claimed shapes can be read and diffed, not just asserted. Plans
+  * come from the adaptive [[Session.plans]] session, so they show the
+  * AQE wrapper the sweep runs under.
   * Output is committed as PLANS.md; regenerate with (filters sbt's
   * [info] prefixes/banner AND JVM identity hashes like `@1a2b3c4d`,
   * which churn every run and would bury real plan diffs):
@@ -150,13 +150,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the AQE plan, as the sweep runs it
+    val spark = Session.plans(adaptive = true)
     println("# PLANS — physical-plan audit")
     println()
     println(s"Generated by `graft.PlanAudit` on `$sfDir`; regenerate after")

@@ -57,6 +57,15 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
+  /** Counts every table once, so a timing loop's first query is not
+    * charged the session's first scans and footer reads. A table that
+    * fails to load is skipped. */
+  def warm(s: SparkSession, d: String): Unit =
+    names.foreach { n =>
+      try (if (n == "events") events(s, d) else load(s, d, n)).count()
+      catch { case _: Throwable => }
+    }
+
   /** Small-input parallelism guard for expensive narrow transforms.
     *
     * A parquet file smaller than one row group scans as ONE task, so

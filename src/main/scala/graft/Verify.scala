@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same data-sized shuffle width as Bench (results are
-    // partition-count invariant — verified at 4/7/32 — this only
-    // affects wall time).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      // uniform for the whole sweep (q_bucket_prune needs it OFF, and a
-      // mid-sweep session-conf flip would make later plans order-dependent)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.sweep()
     new java.io.File(outDir).mkdirs()
     // Dev-only: SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries
     // (unset in driver runs — the full sweep is the contract).

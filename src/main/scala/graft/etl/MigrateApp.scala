@@ -52,14 +52,7 @@ object MigrateApp {
     require(args.nonEmpty, "usage: MigrateApp <run|check|retry|sync> ...")
     val cmd = args(0)
     val (srcPath, pkCol, workDir, batchSize) = resolveArgs(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.sweep()
     try dispatch(spark, cmd, srcPath, pkCol, workDir, batchSize)
     finally spark.stop()
   }

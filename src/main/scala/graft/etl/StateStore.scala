@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Path, Paths}
 
 /** One migrated (or attempted) PK-range batch — the Spark-native analog
@@ -17,9 +17,9 @@ case class BatchRecord(
     status: String, // PENDING | DONE | ERROR
     runId: Long)
 
-/** The backend contract both state stores implement — what
-  * [[IncrementalRunner]] actually needs. Metadata-scale by design:
-  * every method moves O(number of batches) records, never O(rows). */
+/** The state contract [[IncrementalRunner]] needs, implemented by
+  * [[StateStore]]. Metadata-scale by design: every method moves
+  * O(number of batches) records, never O(rows). */
 trait BatchState {
   def currentVersion: Long
   def read(): Seq[BatchRecord]
@@ -201,168 +201,5 @@ private object StateStore {
   def deleteDir(d: Path): Unit = {
     files(d).foreach(Files.deleteIfExists)
     Files.deleteIfExists(d)
-  }
-}
-
-/** The transactional upgrade path for S5's state table — an own mini
-  * commit-log in the public table-format idiom (append-only data
-  * files + a manifest made current by one ATOMIC filesystem rename),
-  * closing the "Delta MERGE if a jar were present" branch with zero
-  * dependencies.
-  *
-  * Layout under `dir`:
-  *   - `data/delta-<v>-<uuid>/` — one parquet delta per upsert (just
-  *     that call's records), or `data/base-<v>-<uuid>/` — a compacted
-  *     full snapshot.
-  *   - `manifest/<v padded>.mf` — text, one data-directory name per
-  *     line in replay order. Written to `manifest/.tmp-<uuid>` first,
-  *     then `ATOMIC_MOVE`d into place: the rename IS the commit, so a
-  *     manifest either exists complete or not at all — no marker file
-  *     needed and no torn read possible.
-  *
-  * Versus [[StateStore]]'s rewrite-the-world versions: an upsert here
-  * writes O(batch) records instead of O(total), and the periodic
-  * compaction (every [[compactEvery]] deltas) bounds replay length —
-  * the append-log + compaction upgrade the StateStore scaladoc names.
-  * Crash anywhere is harmless by construction: a delta without a
-  * manifest is an invisible orphan (swept on a later commit), a
-  * `.tmp-` manifest never parses as current, and cleanup runs only
-  * AFTER the new manifest is live. Replay semantics match
-  * StateStore.upsert exactly: each delta replaces any earlier record
-  * with the same (table, pkLower, pkUpper) key.
-  *
-  * Concurrency contract: many readers, optimistic writers. Each
-  * commit claims its version with an atomic `.lock-v` create, so two
-  * writers racing to the same version fail loudly
-  * (FileAlreadyExistsException) instead of silently overwriting each
-  * other — the loser re-reads current state and retries at the next
-  * version. */
-class ManifestStateStore(spark: SparkSession, dir: String) extends BatchState {
-  import spark.implicits._
-
-  private val dataDir = Paths.get(dir, "data")
-  private val mfDir = Paths.get(dir, "manifest")
-  private val compactEvery = 8
-  private val keepManifests = 4
-
-  private def listDir(d: java.nio.file.Path): Seq[String] = {
-    if (!Files.exists(d)) return Seq.empty
-    val stream = Files.list(d)
-    try {
-      val it = stream.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) buf += it.next().getFileName.toString
-      buf.toSeq
-    } finally stream.close()
-  }
-
-  /** Committed manifest versions — a name parses as committed iff it
-    * is `<digits>.mf` (tmp files and strays never match). */
-  private def manifestVersions: Seq[Long] =
-    listDir(mfDir).collect {
-      case n if n.endsWith(".mf") && n.dropRight(3).forall(_.isDigit) &&
-        n.length > 3 => n.dropRight(3).toLong
-    }.sorted
-
-  override def currentVersion: Long = manifestVersions.lastOption.getOrElse(-1L)
-
-  private def manifestFiles(v: Long): Seq[String] = {
-    val p = mfDir.resolve(f"$v%020d.mf")
-    new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq
-      .map(_.trim).filter(_.nonEmpty)
-  }
-
-  override def read(): Seq[BatchRecord] = {
-    val v = currentVersion
-    if (v < 0) return Seq.empty
-    manifestFiles(v).foldLeft(Seq.empty[BatchRecord]) { (acc, f) =>
-      val delta = spark.read.parquet(dataDir.resolve(f).toString)
-        .as[BatchRecord].collect().toSeq
-      val keys = delta.map(r => (r.table, r.pkLower, r.pkUpper)).toSet
-      acc.filterNot(r => keys.contains((r.table, r.pkLower, r.pkUpper))) ++ delta
-    }
-  }
-
-  override def upsert(records: Seq[BatchRecord]): Unit = {
-    val v = currentVersion + 1
-    val prev = if (v == 0) Seq.empty else manifestFiles(v - 1)
-    val uuid = java.util.UUID.randomUUID().toString
-    Files.createDirectories(dataDir)
-    Files.createDirectories(mfDir)
-    // compact: fold the whole replayed state (with this batch applied)
-    // into one base file, so replay length stays bounded
-    val entries: Seq[String] =
-      if (prev.length + 1 > compactEvery) {
-        val name = s"base-$v-$uuid"
-        val keys = records.map(r => (r.table, r.pkLower, r.pkUpper)).toSet
-        val full = read().filterNot(r =>
-          keys.contains((r.table, r.pkLower, r.pkUpper))) ++ records
-        full.toDS().coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(dataDir.resolve(name).toString)
-        Seq(name)
-      } else {
-        val name = s"delta-$v-$uuid"
-        records.toDS().coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(dataDir.resolve(name).toString)
-        prev :+ name
-      }
-    // two-phase commit: full write to a tmp name, then ONE atomic
-    // rename makes it the current version. Version v is CLAIMED first
-    // by creating `.lock-v` (atomic fail-if-exists): POSIX ATOMIC_MOVE
-    // silently replaces an existing target, so two racing writers that
-    // both computed version v would otherwise lose the first commit —
-    // the claim turns that race into a loud FileAlreadyExistsException
-    // (optimistic concurrency: the loser re-reads and retries at v+1).
-    // The claim is a SEPARATE name so readers — which only parse
-    // `<digits>.mf` — can never observe a half-committed version.
-    val tmp = mfDir.resolve(s".tmp-$uuid")
-    Files.write(tmp, entries.mkString("\n").getBytes("UTF-8"))
-    claimVersion(mfDir.resolve(s".lock-$v"), mfDir.resolve(f"$v%020d.mf"))
-    Files.move(tmp, mfDir.resolve(f"$v%020d.mf"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    cleanup(v)
-  }
-
-  /** Claim version ownership before publishing. A lock whose manifest
-    * EXISTS means a concurrent writer committed this version — fail
-    * loudly (the caller re-reads and retries at the next version). A
-    * lock WITHOUT its manifest is a stale claim from a commit that
-    * crashed between claim and publish — take it over, so crash-resume
-    * stays live (the "crash anywhere is harmless" contract includes
-    * crashing inside the commit itself). The takeover narrows
-    * concurrent-writer detection to the claim-to-publish window —
-    * microseconds — which is the documented best-effort residue of an
-    * advisory file lock. */
-  private def claimVersion(lock: java.nio.file.Path,
-                           manifest: java.nio.file.Path): Unit =
-    try Files.createFile(lock)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        if (Files.exists(manifest))
-          throw new IllegalStateException(
-            s"concurrent writer committed ${manifest.getFileName} — " +
-              "re-read state and retry at the next version", e)
-      // else: stale claim from a crashed commit — proceed (take over)
-    }
-
-  /** Post-commit sweep — retires old manifests and any data directory
-    * no retained manifest references (including crash orphans). Runs
-    * only after the new manifest is live; a crash mid-sweep leaves
-    * extra files, never a missing current version. */
-  private def cleanup(current: Long): Unit = {
-    val vs = manifestVersions
-    val (drop, keep) = vs.partition(_ <= current - keepManifests)
-    drop.foreach { v =>
-      Files.deleteIfExists(mfDir.resolve(f"$v%020d.mf"))
-      Files.deleteIfExists(mfDir.resolve(s".lock-$v"))
-    }
-    val live = keep.flatMap(manifestFiles).toSet
-    listDir(dataDir).filterNot(live).foreach { orphan =>
-      val op = dataDir.resolve(orphan)
-      // data dirs are flat parquet directories: files first, then the dir
-      listDir(op).foreach(f => Files.deleteIfExists(op.resolve(f)))
-      Files.deleteIfExists(op)
-    }
   }
 }

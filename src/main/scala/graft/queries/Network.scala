@@ -380,7 +380,7 @@ object Network {
     // round's job (labels only ever come from initial node ids, so
     // guarding the seed covers every round). A standalone driver-side
     // max() pre-action here would make merely CONSTRUCTING this plan
-    // trigger a Spark job (PlanAudit, BudgetProbe, plan-only tooling).
+    // trigger a Spark job (PlanAudit, PlanScan, plan-only tooling).
     var lab = nodes.withColumn("lab",
       when(col("node") < 128, col("node"))
         .otherwise(raise_error(concat(

@@ -20,10 +20,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** The write half of the [[RangeSource]] connector: a file-backed
   * table with SNAPSHOT-COMMIT semantics — the reference's forwarder
   * sink (stage files, then an atomic metadata commit) as a real
-  * DataSource V2 `SupportsWrite`, sharing the commit discipline
-  * [[graft.etl.StateStore]]'s ManifestStateStore proved
-  * (task-temp + atomic rename; a crash mid-commit leaves the previous
-  * snapshot intact).
+  * DataSource V2 `SupportsWrite`, committed by atomic rename
+  * (task-temp files, then one manifest publish; a crash mid-commit
+  * leaves the previous snapshot intact).
   *
   * Layout under `path`:
   *  - `part-<queryId>-<partition>.csv` — committed data files

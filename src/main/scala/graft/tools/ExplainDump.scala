@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the named queries to files — the
   * optimization-round evidence trail (plans/r15/<query>_before.txt /
   * _after.txt). Unlike [[graft.PlanAudit]] (the curated PLANS.md
   * narrative), this is a plain per-query dump driven by the arg list,
-  * run under the exact Bench session config so the captured plan is
-  * the one the sweep executes.
+  * run under the Bench session ([[graft.Session.sweep]]) so the
+  * captured plan is the one the sweep executes.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *        sbt "runMain graft.tools.ExplainDump /root/repo/plans/r15 before q_acf q_pacf"
@@ -19,17 +17,7 @@ object ExplainDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.sweep()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { q =>
       val fn = graft.SparkEntry.queries.getOrElse(q, sys.error(s"unknown query $q"))

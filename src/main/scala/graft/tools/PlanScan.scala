@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Registry-wide physical-plan sweep for the two join shapes that do
   * not survive a 100× scale-up: CartesianProduct (|A|×|B| work with
   * full materialization) and BroadcastNestedLoopJoin over an UNBOUNDED
@@ -12,7 +10,13 @@ import org.apache.spark.sql.SparkSession
   * scale-SAFE scalar-broadcast pattern (1..k rows by construction) and
   * gets allowlisted in PlanGuardSpec; anything else is a regression.
   *
+  * Clean queries print `ok <query> shuffles=N`, the main-tree shuffle
+  * count ([[shuffleExchanges]]) that PlanGuardSpec budgets pin. Plans
+  * come from the static [[graft.Session.plans]] session.
+  *
   * Run: {{{ sbt -batch "runMain graft.tools.PlanScan /root/testdata/sf0.001" }}}
+  * Shuffle counts for chosen queries (to pin a budget):
+  * {{{ sbt -batch "runMain graft.tools.PlanScan /root/testdata/sf0.001" | grep -E ' (q_kcore|q_hits) ' }}}
   */
 object PlanScan {
 
@@ -158,15 +162,8 @@ object PlanScan {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static plans: AQE's wrapper node hides the tree from collect
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // static plans: AQE's wrapper node hides the tree from collect
+    val spark = graft.Session.plans(adaptive = false)
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.executedPlan

@@ -86,31 +86,15 @@ class StateBackendSpec extends SparkSpec {
     assert(a.nonEmpty && a == b)
   }
 
-  // ---- batch-state backends: the S5 transactional upgrade path ----
+  // ---- the migration state store ----
 
-  import graft.etl.{BatchRecord, ManifestStateStore, StateStore}
+  import graft.etl.{BatchRecord, StateStore}
 
   private def tmp(): String =
     tempDir("graft-state")
 
   private def rec(lo: Long, hi: Long, st: String, run: Long) =
     BatchRecord("t", lo, hi, hi - lo, st, run)
-
-  test("manifest backend matches StateStore semantics batch-for-batch") {
-    val a = new StateStore(spark, tmp())
-    val b = new ManifestStateStore(spark, tmp())
-    val batches = Seq(
-      Seq(rec(-1, 10, "DONE", 1)),
-      Seq(rec(10, 20, "PENDING", 2), rec(20, 30, "DONE", 2)),
-      Seq(rec(10, 20, "DONE", 3)), // keyed replace
-      Seq(rec(30, 40, "ERROR", 4)))
-    batches.foreach { batch =>
-      a.upsert(batch); b.upsert(batch)
-      assert(a.read().sortBy(_.pkLower) == b.read().sortBy(_.pkLower))
-    }
-    assert(b.frontier("t") == 30L)
-    assert(b.pending("t").map(_.pkLower) == Seq(30L))
-  }
 
   test("state store reads the Spark-written layout and continues from it") {
     import spark.implicits._
@@ -182,81 +166,17 @@ class StateBackendSpec extends SparkSpec {
     assert(new StateStore(spark, dir).read() == before :+ rec(10, 20, "DONE", 2))
   }
 
-  test("manifest backend: atomic-rename commit survives every crash point") {
+  test("state store keeps the last 8 committed versions and every record") {
     val dir = tmp()
-    val st = new ManifestStateStore(spark, dir)
-    st.upsert(Seq(rec(-1, 10, "DONE", 1)))
-    val before = st.read()
-
-    // crash point 1: a delta written but never committed (no manifest
-    // rename) — simulate by dropping an orphan parquet dir into data/
-    import spark.implicits._
-    val orphan = java.nio.file.Paths.get(dir, "data", "delta-99-orphan")
-    Seq(rec(900, 910, "DONE", 9)).toDS().coalesce(1)
-      .write.parquet(orphan.toString)
-    assert(new ManifestStateStore(spark, dir).read() == before,
-      "an uncommitted delta must be invisible")
-
-    // crash point 2: a torn manifest write — the tmp file never parses
-    // as a committed version
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "manifest", ".tmp-crashed"),
-      "delta-99-orphan".getBytes("UTF-8"))
-    val resumed = new ManifestStateStore(spark, dir)
-    assert(resumed.read() == before, "a tmp manifest must be invisible")
-
-    // resume: the next upsert commits normally and sweeps the orphan
-    resumed.upsert(Seq(rec(10, 20, "DONE", 2)))
-    assert(resumed.read().map(_.pkUpper).sorted == Seq(10L, 20L))
-    assert(!java.nio.file.Files.exists(orphan),
-      "the post-commit sweep must retire crash orphans")
-    assert(resumed.frontier("t") == 20L)
-
-    // crash point 3: a commit that died BETWEEN the version claim and
-    // the manifest publish — the stale .lock must be taken over, not
-    // deadlock the resuming writer at that version forever
-    val nextV = resumed.currentVersion + 1
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(dir, "manifest", s".lock-$nextV"))
-    resumed.upsert(Seq(rec(20, 30, "DONE", 3)))
-    assert(resumed.frontier("t") == 30L,
-      "a stale version claim must not block crash-resume")
-  }
-
-  test("manifest backend: compaction bounds replay and preserves state") {
-    val dir = tmp()
-    val st = new ManifestStateStore(spark, dir)
-    (0 until 12).foreach(i => st.upsert(Seq(rec(i * 10, i * 10 + 10, "DONE", i))))
-    assert(st.read().size == 12)
-    assert(st.frontier("t") == 120L)
-    // after >compactEvery upserts the current manifest must reference a
-    // bounded file list (a base + recent deltas), not all 12
-    val v = st.currentVersion
-    val mf = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "manifest", f"$v%020d.mf")), "UTF-8")
-    val entries = mf.split("\n").filter(_.nonEmpty)
-    assert(entries.length <= 9, s"replay list must stay bounded, got ${entries.length}")
-    assert(entries.exists(_.startsWith("base-")), "compaction must have produced a base")
-    // a fresh reader over the compacted log sees the identical state
-    assert(new ManifestStateStore(spark, dir).read().sortBy(_.pkLower)
-      == st.read().sortBy(_.pkLower))
-  }
-
-  test("incremental runner crash/resume runs unchanged on the manifest backend") {
-    val src = Tables.orders(spark, sfDir)
-    val out = tmp()
-    val state = new ManifestStateStore(spark, s"$out/state")
-    val runner = new graft.etl.IncrementalRunner(spark, state,
-      new graft.etl.ParquetRangeSink(s"$out/sink"), batchSize = 400L)
-    // crash after 2 batches, then resume — every row exactly once
-    intercept[RuntimeException] {
-      runner.run(src, "orders", "o_orderkey", failAt = 2)
-    }
-    val frontierAfterCrash = state.frontier("orders")
-    assert(frontierAfterCrash > Long.MinValue)
-    runner.run(src, "orders", "o_orderkey")
-    val total = spark.read.parquet(s"$out/sink/orders/range_*").count()
-    assert(total == src.count(), s"resume must migrate exactly once, got $total")
-    assert(runner.validate(src, "orders", "o_orderkey").isEmpty)
+    val st = new StateStore(spark, dir)
+    val recs = (0 until 12).map(i => rec(i * 10L, i * 10L + 10, "DONE", i))
+    recs.foreach(r => st.upsert(Seq(r)))
+    val versions = java.nio.file.Paths.get(dir).toFile.list().toSeq
+      .filter(_.startsWith("v=")).sortBy(_.drop(2).toInt)
+    assert(versions == (4 to 11).map(v => s"v=$v"), versions)
+    assert(versions.forall(v =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, v, "_COMMITTED"))))
+    assert(st.currentVersion == 11L && st.read() == recs)
+    assert(new StateStore(spark, dir).read() == recs)
   }
 }
