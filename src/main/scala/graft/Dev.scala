@@ -4,9 +4,8 @@ package graft
   * Bench session ([[Session.sweep]]) and prints every run's wall — the
   * warm repeats expose steady-state cost (what a perf change moves)
   * without a full sweep. Between runs it drains scoped caches and
-  * clears the cache, like Bench's timed loop. Not a driver surface;
-  * Bench remains the official measurement (probes, self-correction,
-  * history).
+  * clears the cache, like Bench's timed loop. Bench remains the
+  * official measurement (probes, self-correction, history).
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *        sbt "runMain graft.Dev q_kcore q_hits [reps]"

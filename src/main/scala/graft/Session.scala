@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place a main builds its SparkSession. Two profiles:
   *
-  *  - [[sweep]]: the driver sweep's session (`Bench`, `Verify`, `Dev`,
+  *  - [[sweep]]: the bench sweep's session (`Bench`, `Verify`, `Dev`,
   *    `ExplainDump`, `MigrateApp`), sized by `SPARK_GRAFT_CPUS` and
   *    `SPARK_GRAFT_SHUFFLE`.
   *  - [[plans]]: a fixed four-thread session for plan-only tools

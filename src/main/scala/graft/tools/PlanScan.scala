@@ -16,7 +16,7 @@ package graft.tools
   *
   * Run: {{{ sbt -batch "runMain graft.tools.PlanScan /root/testdata/sf0.001" }}}
   * Shuffle counts for chosen queries (to pin a budget):
-  * {{{ sbt -batch "runMain graft.tools.PlanScan /root/testdata/sf0.001" | grep -E ' (q_kcore|q_hits) ' }}}
+  * {{{ sbt -batch "runMain graft.tools.PlanScan <sfDir>" | grep -E ' (q_kcore|q_hits) ' }}}
   */
 object PlanScan {
 
