@@ -151,6 +151,15 @@ object Bench {
     else parse("BENCH_LOCAL.json", """"(q_[A-Za-z0-9_]+)":\{"wall":([0-9.]+)""".r)
   }
 
+  /** BENCH_HISTORY's min-merge: per query, the lower of its committed
+    * min and this sweep's wall. A query that threw is left out: its
+    * near-zero wall would lower the min for good. */
+  def mergeHistory(history: Map[String, Double], walls: Seq[(String, Double)],
+                   errored: Set[String]): Map[String, Double] =
+    walls.filterNot(w => errored(w._1)).foldLeft(history) { case (h, (n, w)) =>
+      h.updated(n, h.get(n).fold(w)(math.min(_, w)))
+    }
+
   /** Fixed small Spark job, timed: ~4M-row codegen'd modulo aggregate
     * through one real shuffle. Deterministic work; compare only within
     * a sweep (JIT-warmed by an untimed call before the loop). */
@@ -326,8 +335,9 @@ object Bench {
     // A query that THROWS is timed near-zero — fast-because-broken would
     // otherwise flatter the total silently. Record the exception class
     // per query; the emitted `errors`/`errors_n` fields make a broken
-    // query loud on every rendered line (the oracle gate still catches
-    // the correctness side, this is the bench-side tripwire).
+    // query loud on every rendered line, its wall stays out of
+    // BENCH_HISTORY and the sweep exits non-zero (the oracle gate still
+    // catches the correctness side, this is the bench-side tripwire).
     val queryErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
@@ -490,15 +500,16 @@ object Bench {
     // min converges on each query's honest cost on this box.
     if (only.isEmpty && results.size == SparkEntry.queries.size &&
         sfDir.replaceAll("/+$", "").endsWith("sf0.1")) {
-      val merged = (history.keySet ++ walls.map(_._1)).toSeq.sorted.map { k =>
-        val v = (history.get(k).toSeq ++ walls.collect { case (`k`, w) => w }).min
-        "\"" + k + "\":" + f3(v)
-      }.mkString("{", ",", "}")
+      val merged = mergeHistory(history, walls, queryErrors.keySet.toSet)
+        .toSeq.sorted.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+        .mkString("{", ",", "}")
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_HISTORY.json"), merged + "\n")
       catch { case _: Throwable => }
     }
     spark.stop()
+    // a sweep in which a query threw is not a valid measurement
+    if (errs.nonEmpty) sys.exit(1)
   }
 
   /** One-line result JSON. 3-decimal seconds keep the line compact,

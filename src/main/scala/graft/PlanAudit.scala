@@ -6,13 +6,11 @@ package graft
   * the claimed shapes can be read and diffed, not just asserted. Plans
   * come from the adaptive [[Session.plans]] session, so they show the
   * AQE wrapper the sweep runs under.
-  * Output is committed as PLANS.md; regenerate with (filters sbt's
-  * [info] prefixes/banner AND JVM identity hashes like `@1a2b3c4d`,
-  * which churn every run and would bury real plan diffs):
+  * Plans go through [[normalise]], so two runs print the same bytes.
+  * Output is committed as PLANS.md; regenerate with:
   * {{{
-  * sbt -batch "runMain graft.PlanAudit /root/testdata/sf0.001" 2>/dev/null \
-  *   | sed 's/^\[info\] \{0,1\}//' | sed -n '/^# PLANS/,$p' \
-  *   | sed '/^\[success\]/d' | sed 's/@[0-9a-f]\{6,\}//g' > PLANS.md
+  * sbt -batch "runMain graft.PlanAudit <fixture dir>" 2>/dev/null \
+  *   | sed -n '/^# PLANS/,$p' > PLANS.md
   * }}}
   */
 object PlanAudit {
@@ -148,6 +146,17 @@ object PlanAudit {
     "q_readability" -> "one narrow per-doc projection (word/sentence/syllable censuses as codegen'd split-size + regexp_count), one partial/final language aggregate — single exchange before the final sort",
   )
 
+  /** `plan` with its run-to-run tokens made stable: `plan_id`s renumbered
+    * by first appearance, stage dir suffixes, lambda classes, identity hashes. */
+  def normalise(plan: String): String = {
+    val ids = scala.collection.mutable.Map[String, Int]()
+    "plan_id=([0-9]+)".r
+      .replaceAllIn(plan, m => s"plan_id=${ids.getOrElseUpdate(m.group(1), ids.size + 1)}")
+      .replaceAll("graft_stage_[0-9]+/([A-Za-z0-9_]+)_[0-9]+", "graft_stage_N/$1_N")
+      .replaceAll("Lambda\\$[0-9]+/0x[0-9a-f]+", "Lambda\\$N")
+      .replaceAll("@[0-9a-f]{1,8}\\b", "")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // the AQE plan, as the sweep runs it
@@ -166,8 +175,8 @@ object PlanAudit {
       println("```")
       val df = SparkEntry.queries(name)(spark, sfDir)
       // queryExecution.explainString(FormattedMode) without executing
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).trim)
+      println(normalise(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode).trim))
       println("```")
       spark.catalog.clearCache()
     }

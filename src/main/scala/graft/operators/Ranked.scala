@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-import graft.Tables
+import graft.{Bounded, Tables}
 import graft.Caches.PersistScoped
 
 /** Shared scale-safe ranking machinery — the ONE implementation of the
@@ -50,8 +50,11 @@ import graft.Caches.PersistScoped
   * in `order` (typically the order key itself, or a struct of it), or
   * the min is not "the value at the crossing". The group domain must
   * be enum-scale (return flags, axis tags — percentile-family
-  * semantics); for unbounded group domains rank every row with
-  * [[groupRanks]] instead. `thresholds` maps the per-group totals
+  * semantics): at most `maxGroups` groups and `cutsPerGroup` threshold
+  * rows per group, both [[enumScale]] unless the caller states its
+  * own, and [[graft.Bounded]] fails the build past them; for unbounded
+  * group domains rank every row with [[groupRanks]] instead.
+  * `thresholds` maps the per-group totals
   * relation (group columns + `tw` = Σ weight) to threshold rows
   * (group columns, `tname` label, `t` BIGINT); thresholds outside
   * [1, tw] silently produce no row. Duplicate `t` values yield one
@@ -60,6 +63,9 @@ import graft.Caches.PersistScoped
   * the range exchange samples its child in a separate job.
   */
 object Ranked {
+
+  /** The cut forms' default group and per-group threshold bound. */
+  val enumScale = 64
 
   /** Adds explicit global rank `rnk` (1-based) and group size `grp_n`
     * to every row of `df` under `order` within `group`: range-
@@ -105,60 +111,67 @@ object Ranked {
       .drop("mid", "pid", "off", "m0")
   }
 
+  /** The driver half of both cut forms: per threshold row, the ONE
+    * `perPart` row (pid, group…, pw, …) whose group's exclusive prefix
+    * `off` in pid order has off < t <= off + pw, as (threshold, part,
+    * off, tw), plus the thresholds' `tname` field. */
+  private def crossings(df: DataFrame, group: Seq[String], perPart: DataFrame,
+                        width: Int, thresholds: DataFrame => DataFrame,
+                        maxGroups: Int, cutsPerGroup: Int)
+      : (Seq[(Row, Row, Long, Long)], StructField) = {
+    val gKey = (r: Row) => group.map(r.getAs[Any])
+    val byGroup = Bounded.collect(perPart, width * maxGroups,
+      "per-(partition, group) rows (width × groups)").toSeq.groupBy(gKey)
+    val offs = byGroup.map { case (g, rows) =>
+      val sorted = rows.sortBy(_.getAs[Int]("pid"))
+      g -> sorted.zip(sorted.scanLeft(0L)(_ + _.getAs[Long]("pw")))
+    }
+    val tw = byGroup.map { case (g, rows) => g -> rows.map(_.getAs[Long]("pw")).sum }
+    val totalsSchema = StructType(group.map(g => df.schema(g)) :+
+      StructField("tw", LongType, nullable = false))
+    val th = Bounded.collect(thresholds(df.sparkSession.createDataFrame(
+        new java.util.ArrayList(tw.map { case (g, n) => Row.fromSeq(g :+ n) }.toSeq.asJava),
+        totalsSchema)),
+      tw.size * cutsPerGroup, "threshold rows (groups × cuts per group)").toSeq
+    val located = th.flatMap { r =>
+      val t = r.getAs[Long]("t")
+      offs.getOrElse(gKey(r), Nil).collectFirst {
+        case (p, off) if t > off && t <= off + p.getAs[Long]("pw") =>
+          (r, p, off, tw(gKey(r)))
+      }
+    }
+    (located, th.headOption.map(_.schema("tname"))
+      .getOrElse(StructField("tname", StringType)))
+  }
+
   /** Count-weighted cut lookup: one row per surviving (group, tname) —
     * (group…, tname, cut_value = the value at rank t of the group's
     * sorted multiset, tw = the group's row count). See the object doc
     * for the plan shape and caller contract. */
   def cutValuesByRank(df: DataFrame, group: Seq[String], order: Seq[Column],
                       value: Column,
-                      thresholds: DataFrame => DataFrame): DataFrame = {
+                      thresholds: DataFrame => DataFrame,
+                      maxGroups: Int = enumScale,
+                      cutsPerGroup: Int = enumScale): DataFrame = {
     val s = df.sparkSession
     val keys = group.map(col) ++ order
+    val width = Tables.shuffleWidth(s)
     val parts = df
-      .repartitionByRange(Tables.shuffleWidth(s), keys: _*)
+      .repartitionByRange(width, keys: _*)
       .sortWithinPartitions(keys: _*)
       .withColumn("mid", monotonically_increasing_id())
       .persistScoped() // counts + target lookup must agree on ids
-    val cnt = parts
-      .groupBy((shiftright(col("mid"), 33).cast("int").as("pid") +:
-        group.map(col)): _*)
-      .agg(count(lit(1)).as("pw"), min(col("mid")).as("m0"))
-      .collect() // ≤ width × |group domain| rows — bounded metadata
-      .toSeq
-    val gKey = (r: Row) => group.map(r.getAs[Any])
-    val byGroup = cnt.groupBy(gKey)
-    // per-group exclusive prefix counts in pid order
-    val offMap = byGroup.flatMap { case (_, rows) =>
-      val sorted = rows.sortBy(_.getAs[Int]("pid"))
-      val offs = sorted.scanLeft(0L)(_ + _.getAs[Long]("pw")).init
-      sorted.zip(offs).map { case (r, off) =>
-        (r.getAs[Int]("pid"), gKey(r)) -> (off, r.getAs[Long]("pw"),
-          r.getAs[Long]("m0"))
-      }
-    }.toMap
-    val twByGroup = byGroup.map { case (g, rows) =>
-      g -> rows.map(_.getAs[Long]("pw")).sum
-    }
-    val groupFields = group.map(g => df.schema(g))
-    val totalsSchema = StructType(groupFields :+
-      StructField("tw", LongType, nullable = false))
-    val th = thresholds(s.createDataFrame(new java.util.ArrayList(
-      twByGroup.map { case (g, tw) => Row.fromSeq(g :+ tw) }.toSeq.asJava),
-      totalsSchema)).collect().toSeq
-    // rank t lives at literal id m0 + (t − off − 1) of the ONE
-    // partition where off < t <= off + pw
-    val targets = th.flatMap { r =>
-      val g = gKey(r)
-      val t = r.getAs[Long]("t")
-      offMap.collectFirst {
-        case ((pid, `g`), (off, w, m0)) if t > off && t <= off + w =>
-          (m0 + (t - off - 1), r.getAs[Any]("tname"), twByGroup(g))
-      }
+    val (located, tname) = crossings(df, group, parts
+        .groupBy((shiftright(col("mid"), 33).cast("int").as("pid") +:
+          group.map(col)): _*)
+        .agg(count(lit(1)).as("pw"), min(col("mid")).as("m0")),
+      width, thresholds, maxGroups, cutsPerGroup)
+    // rank t lives at literal id m0 + (t − off − 1) of its partition
+    val targets = located.map { case (r, p, off, tw) =>
+      (p.getAs[Long]("m0") + (r.getAs[Long]("t") - off - 1), r.getAs[Any]("tname"), tw)
     }
     val labelSchema = StructType(Seq(
-      StructField("mid", LongType, nullable = false),
-      th.headOption.map(r => r.schema("tname"))
-        .getOrElse(StructField("tname", StringType)),
+      StructField("mid", LongType, nullable = false), tname,
       StructField("tw", LongType, nullable = false)))
     val labels = s.createDataFrame(new java.util.ArrayList(
       targets.map(c => Row(c._1, c._2, c._3)).asJava), labelSchema)
@@ -177,61 +190,34 @@ object Ranked {
     * caller contract. */
   def cutValues(df: DataFrame, group: Seq[String], order: Seq[Column],
                 weight: Column, value: Column,
-                thresholds: DataFrame => DataFrame): DataFrame = {
+                thresholds: DataFrame => DataFrame,
+                maxGroups: Int = enumScale,
+                cutsPerGroup: Int = enumScale): DataFrame = {
     val s = df.sparkSession
     val keys = group.map(col) ++ order
     // finer than the session width on purpose: the crossing window
     // scans |thresholds| partitions of |input|/width rows each, so a
     // wider range partitioning directly shrinks the only non-narrow
     // stage (results are width-invariant — ranks come from offsets)
+    val width = math.max(Tables.shuffleWidth(s), 16)
     val parts = df
-      .repartitionByRange(math.max(Tables.shuffleWidth(s), 16), keys: _*)
+      .repartitionByRange(width, keys: _*)
       .withColumn("pid", spark_partition_id())
       .persistScoped() // weight totals + crossing scan must agree on pid
-    val pw = parts.groupBy((col("pid") +: group.map(col)): _*)
-      .agg(sum(weight).as("pw"))
-      .collect() // ≤ width × |group domain| rows — bounded metadata
-      .toSeq
-    val gKey = (r: Row) => group.map(r.getAs[Any])
-    val byGroup = pw.groupBy(gKey)
-    // per-group exclusive prefix weights in pid order
-    val offMap = byGroup.flatMap { case (_, rows) =>
-      val sorted = rows.sortBy(_.getAs[Int]("pid"))
-      val offs = sorted.scanLeft(0L)(_ + _.getAs[Long]("pw")).init
-      sorted.zip(offs).map { case (r, off) =>
-        (r.getAs[Int]("pid"), gKey(r)) -> (off, r.getAs[Long]("pw"))
-      }
-    }.toMap
-    val twByGroup = byGroup.map { case (g, rows) =>
-      g -> rows.map(_.getAs[Long]("pw")).sum
-    }
-    val groupFields = group.map(g => df.schema(g))
-    val totalsSchema = StructType(groupFields :+
-      StructField("tw", LongType, nullable = false))
-    val th = thresholds(s.createDataFrame(new java.util.ArrayList(
-      twByGroup.map { case (g, tw) => Row.fromSeq(g :+ tw) }.toSeq.asJava),
-      totalsSchema)).collect().toSeq
-    // exactly one partition satisfies off < t <= off + pw per (group, t)
-    val crossing = th.flatMap { r =>
-      val g = gKey(r)
-      val t = r.getAs[Long]("t")
-      offMap.collectFirst {
-        case ((pid, `g`), (off, w)) if t > off && t <= off + w =>
-          (pid, g, r.getAs[Any]("tname"), t, off, twByGroup(g))
-      }
-    }
+    val (located, tname) = crossings(df, group,
+      parts.groupBy((col("pid") +: group.map(col)): _*).agg(sum(weight).as("pw")),
+      width, thresholds, maxGroups, cutsPerGroup)
     val crossSchema = StructType(
       StructField("pid", IntegerType, nullable = false) +:
-        (groupFields ++ Seq(
-          th.headOption.map(r => r.schema("tname"))
-            .getOrElse(StructField("tname", StringType)),
+        (group.map(g => df.schema(g)) ++ Seq(tname,
           StructField("t", LongType, nullable = false),
           StructField("off", LongType, nullable = false),
           StructField("tw", LongType, nullable = false))))
     val crossDf = s.createDataFrame(new java.util.ArrayList(
-      crossing.map(c => Row.fromSeq(
-        (c._1 +: c._2) ++ Seq(c._3, c._4, c._5, c._6))).asJava), crossSchema)
-    val pids = crossing.map(_._1).distinct
+      located.map { case (r, p, off, tw) => Row.fromSeq(
+        (p.getAs[Int]("pid") +: group.map(r.getAs[Any])) ++
+          Seq(r.getAs[Any]("tname"), r.getAs[Long]("t"), off, tw)) }.asJava), crossSchema)
+    val pids = located.map(_._2.getAs[Int]("pid")).distinct
     val inCrossing = if (pids.isEmpty) lit(false)
                      else col("pid").isin(pids: _*)
     // default RANGE frame: ties under `order` cumulate together, so the

@@ -37,19 +37,11 @@ object Similarity {
 
   /** Left-to-right double-precision dot product of two float arrays —
     * the codegen'd native expression (see graft.functions
-    * .DotProductF32); numerically identical to [[dotHof]] but without
-    * per-element lambda dispatch. Callers must hold a session with
-    * GraftFunctions registered (operators entered via a DataFrame call
-    * [[ensureRegistered]] first). */
+    * .DotProductF32), no per-element lambda dispatch. Callers must
+    * hold a session with GraftFunctions registered (operators entered
+    * via a DataFrame call [[ensureRegistered]] first). */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("dot_f32", a, b)
-
-  /** Reference formulation via higher-order functions; kept for the
-    * bit-identity cross-check in SimilaritySpec. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   private[operators] def ensureRegistered(df: DataFrame): Unit =
     graft.functions.GraftFunctions.register(df.sparkSession)
@@ -154,6 +146,9 @@ object Similarity {
   /** Driver-pinned centroid set: (cid, quantized components, c·c). */
   private type Cents = (Array[Long], Array[Array[Float]], Array[Double])
 
+  /** Default `maxLists`: the most lists (seed values) IVF may train. */
+  val defaultMaxLists = 1024
+
   /** 1e-6 fixed-point quantization of a mean vector plus its squared
     * norm — the ONE shared quantum both the coarse quantizer and the
     * PQ codebooks pin their determinism contracts to (a drift between
@@ -166,8 +161,8 @@ object Similarity {
     (q, acc)
   }
 
-  private def collectCents(grouped: DataFrame): Cents = {
-    val rows = grouped.collect().map { r =>
+  private def collectCents(grouped: DataFrame, max: Int, what: String): Cents = {
+    val rows = graft.Bounded.collect(grouped, max, what).map { r =>
       val (q, acc) = quantize(r.getSeq[Double](1))
       (r.getLong(0), q, acc)
     }.sortBy(_._1) // ascending cid: strict-less insertion ties to lowest cid
@@ -204,15 +199,17 @@ object Similarity {
     * and the index costs `iterations` corpus passes, not
     * iterations+1. Returns (final centroids, assigned lists); `lists`
     * is persisted — the CALLER must unpersist it when done. */
-  private def trainCoarse(cand: DataFrame, dims: Int, iterations: Int): (Cents, DataFrame) = {
+  private def trainCoarse(cand: DataFrame, dims: Int, iterations: Int,
+                          maxLists: Int): (Cents, DataFrame) = {
     require(iterations >= 1, "coarse quantizer needs at least one Lloyd step")
     val vm = udaf(new VectorMean(dims))
     var cents = collectCents(cand.groupBy(col("seed").as("cid"))
-      .agg(vm(col("ce")).as("centroid")))
+      .agg(vm(col("ce")).as("centroid")), maxLists, "seed centroids (maxLists)")
     var lists = cand.select(col("neighbor_id"), col("ce"),
       element_at(assign(cand, "ce", cents, 1), 1).as("cid")).persist()
     for (i <- 1 to iterations) {
-      cents = collectCents(lists.groupBy(col("cid")).agg(vm(col("ce")).as("centroid")))
+      cents = collectCents(lists.groupBy(col("cid")).agg(vm(col("ce")).as("centroid")),
+        cents._1.length, "centroids (one per list) in a Lloyd step")
       if (i < iterations) {
         val prev = lists
         lists = cand.select(col("neighbor_id"), col("ce"),
@@ -222,13 +219,6 @@ object Similarity {
     }
     (cents, lists)
   }
-
-  private def requireNumericSeed(candidates: DataFrame, seedCol: String): Unit =
-    require(candidates.schema(seedCol).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"coarse quantizer seed column '$seedCol' must be numeric (cast to " +
-        "bigint for cluster ids); a non-numeric column would silently " +
-        "collapse the quantizer to one NULL cluster")
 
   /** IVF (inverted-file) approximate top-k — the other classic ANN
     * scale path next to [[lshTopK]]: train a coarse quantizer, assign
@@ -263,34 +253,46 @@ object Similarity {
     * registry). */
   def ivfTopK(probes: DataFrame, candidates: DataFrame, k: Int,
               nprobe: Int = 2, iterations: Int = 1, dims: Int = 64,
-              seedCol: String = "label"): DataFrame = {
-    requireNumericSeed(candidates, seedCol)
+              seedCol: String = "label",
+              maxLists: Int = defaultMaxLists): DataFrame =
+    withCoarse(candidates, iterations, dims, seedCol, maxLists) { (_, cents, lists) =>
+      val p = probes.filter(col("embedding").isNotNull)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val pAssigned = p.select(col("probe_id"), col("pe"),
+        explode(assign(p, "pe", cents, nprobe)).as("cid"))
+      // each candidate lives in exactly one list, so (probe, neighbor)
+      // pairs are unique even with nprobe > 1 — no dedup needed.
+      val scored = lists.join(broadcast(pAssigned), Seq("cid"))
+        .filter(col("probe_id") =!= col("neighbor_id"))
+        .withColumn("cosine", cosine(col("pe"), col("ce")))
+      heapTopK(scored, k)
+    }
+
+  /** Shared coarse-quantizer scaffold of every IVF path: the de-nulled
+    * corpus projection `cand`, the trained centroids and the persisted
+    * inverted lists, released once `f` has built its result. */
+  private def withCoarse[T](candidates: DataFrame, iterations: Int, dims: Int,
+      seedCol: String, maxLists: Int)(f: (DataFrame, Cents, DataFrame) => T): T = {
+    require(candidates.schema(seedCol).dataType
+        .isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"coarse quantizer seed column '$seedCol' must be numeric (cast to " +
+        "bigint for cluster ids); a non-numeric column would silently " +
+        "collapse the quantizer to one NULL cluster")
     ensureRegistered(candidates)
     // The corpus projection carries the seed label so the seed
     // centroids and every Lloyd pass read the SAME cached relation —
     // one parquet scan per training action. Rows with a NULL
     // embedding or NULL seed are un-indexable and are dropped here
-    // (a NULL value passes requireNumericSeed's TYPE check but would
-    // NPE the driver-side centroid collect).
+    // (a NULL value passes the TYPE check above but would NPE the
+    // driver-side centroid collect).
     val cand = graft.Tables.widen(candidates)
       .filter(col("embedding").isNotNull && col(seedCol).isNotNull)
       .select(
         col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col(seedCol).cast("bigint").as("seed")).persist()
     try {
-      val (cents, lists) = trainCoarse(cand, dims, iterations)
-      try {
-        val p = probes.filter(col("embedding").isNotNull)
-          .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-        val pAssigned = p.select(col("probe_id"), col("pe"),
-          explode(assign(p, "pe", cents, nprobe)).as("cid"))
-        // each candidate lives in exactly one list, so (probe, neighbor)
-        // pairs are unique even with nprobe > 1 — no dedup needed.
-        val scored = lists.join(broadcast(pAssigned), Seq("cid"))
-          .filter(col("probe_id") =!= col("neighbor_id"))
-          .withColumn("cosine", cosine(col("pe"), col("ce")))
-        heapTopK(scored, k)
-      } finally lists.unpersist()
+      val (cents, lists) = trainCoarse(cand, dims, iterations, maxLists)
+      try f(cand, cents, lists) finally lists.unpersist()
     } finally cand.unpersist()
   }
 
@@ -316,8 +318,9 @@ object Similarity {
     def collectBooks(assigned: DataFrame): Books = {
       // assigned: (sub, code, subvec) → per-(sub, code) mean,
       // quantized by the SAME shared quantum as the coarse quantizer
-      val rows = assigned.groupBy(col("sub"), col("code"))
-        .agg(vm(col("subvec")).as("cent")).collect()
+      val rows = graft.Bounded.collect(assigned.groupBy(col("sub"), col("code"))
+          .agg(vm(col("subvec")).as("cent")),
+        nSub * codesPerSub, "codebook centroids (nSub × codesPerSub)")
       val books = Array.fill(nSub, codesPerSub)(Array.fill(subDim)(0f))
       val c2 = Array.fill(nSub, codesPerSub)(0.0)
       rows.foreach { r =>
@@ -427,9 +430,10 @@ object Similarity {
   def ivfPqTopK(probes: DataFrame, candidates: DataFrame, k: Int,
                 nprobe: Int = 2, iterations: Int = 1,
                 nSub: Int = 16, codesPerSub: Int = 32, pqIterations: Int = 2,
-                dims: Int = 64, seedCol: String = "label"): DataFrame =
+                dims: Int = 64, seedCol: String = "label",
+                maxLists: Int = defaultMaxLists): DataFrame =
     withIvfPqTraining(candidates, nSub, codesPerSub, iterations,
-        pqIterations, dims, seedCol) { (cents, lists, books) =>
+        pqIterations, dims, seedCol, maxLists) { (cents, lists, books) =>
       // the inverted-list file of a real deployment: (cid, id, codes)
       // — at 100 TB written bucketed by cid, ~10 bytes/row (the
       // persistent form IS [[buildIndex]]'s data relation).
@@ -445,9 +449,8 @@ object Similarity {
       heapTopK(scored, k)
     }
 
-  /** Shared IVF-PQ training scaffold: de-nulled corpus projection
-    * (un-indexable rows must not NPE the driver-side training
-    * collects), coarse quantizer, codebooks — then `f` consumes
+  /** Shared IVF-PQ training scaffold: [[withCoarse]] plus the
+    * codebooks — then `f` consumes
     * (cents, lists, books) and the build-time caches release. ONE
     * definition of the pipeline, so the self-contained query path and
     * the persistent index builder cannot drift apart (SimilaritySpec's
@@ -456,23 +459,12 @@ object Similarity {
     * copies). */
   private def withIvfPqTraining[T](candidates: DataFrame, nSub: Int,
       codesPerSub: Int, iterations: Int, pqIterations: Int, dims: Int,
-      seedCol: String)(f: (Cents, DataFrame, Books) => T): T = {
+      seedCol: String, maxLists: Int)(f: (Cents, DataFrame, Books) => T): T = {
     require(dims % nSub == 0,
       s"dims=$dims must divide into nSub=$nSub subspaces (see pqTopK)")
-    requireNumericSeed(candidates, seedCol)
-    ensureRegistered(candidates)
-    val cand = graft.Tables.widen(candidates)
-      .filter(col("embedding").isNotNull && col(seedCol).isNotNull)
-      .select(
-        col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col(seedCol).cast("bigint").as("seed")).persist()
-    try {
-      val (cents, lists) = trainCoarse(cand, dims, iterations)
-      try {
-        val books = trainBooks(cand, nSub, codesPerSub, dims / nSub, pqIterations)
-        f(cents, lists, books)
-      } finally lists.unpersist()
-    } finally cand.unpersist()
+    withCoarse(candidates, iterations, dims, seedCol, maxLists) { (cand, cents, lists) =>
+      f(cents, lists, trainBooks(cand, nSub, codesPerSub, dims / nSub, pqIterations))
+    }
   }
 
   /** Persistent IVF-PQ index — the build-once / search-many split a
@@ -501,9 +493,10 @@ object Similarity {
   def buildIndex(candidates: DataFrame, dir: String,
                  nSub: Int = 16, codesPerSub: Int = 32,
                  iterations: Int = 1, pqIterations: Int = 2,
-                 dims: Int = 64, seedCol: String = "label"): Unit =
+                 dims: Int = 64, seedCol: String = "label",
+                 maxLists: Int = defaultMaxLists): Unit =
     withIvfPqTraining(candidates, nSub, codesPerSub, iterations,
-        pqIterations, dims, seedCol) { (cents, lists, books) =>
+        pqIterations, dims, seedCol, maxLists) { (cents, lists, books) =>
       val s = candidates.sparkSession
       lists.select(col("neighbor_id"),
           encodeCol(lists, "ce", books).as("codes"), col("cid"))
@@ -531,23 +524,27 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$dir/books")
     }
 
-  /** Driver-pinned index metadata re-read from a [[buildIndex]] dir. */
+  /** Driver-pinned index metadata re-read from a [[buildIndex]] dir;
+    * `nSub`, `codesPerSub` and `maxLists` are the ones it was built
+    * with, and bound the collected centroids and codebooks. */
   final class Index private[Similarity] (
       private[Similarity] val dir: String,
       private[Similarity] val cents: Cents,
       private[Similarity] val books: Books)
 
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
-    val cRows = spark.read.parquet(s"$dir/cents").collect()
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+                nSub: Int = 16, codesPerSub: Int = 32,
+                maxLists: Int = defaultMaxLists): Index = {
+    val cRows = graft.Bounded.collect(spark.read.parquet(s"$dir/cents"),
+        maxLists, "index centroids (maxLists)")
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
     val cents: Cents = (cRows.map(_._1), cRows.map(_._2), cRows.map(_._3))
-    val bRows = spark.read.parquet(s"$dir/books").collect()
-    val nSub = bRows.map(_.getInt(0)).max + 1
-    val nCode = bRows.map(_.getInt(1)).max + 1
+    val bRows = graft.Bounded.collect(spark.read.parquet(s"$dir/books"),
+      nSub * codesPerSub, "index codebook centroids (nSub × codesPerSub)")
     val dims0 = bRows.head.getSeq[Float](2).length
-    val b1 = Array.fill(nSub, nCode)(Array.fill(dims0)(0f))
-    val b2 = Array.fill(nSub, nCode)(0.0)
+    val b1 = Array.fill(nSub, codesPerSub)(Array.fill(dims0)(0f))
+    val b2 = Array.fill(nSub, codesPerSub)(0.0)
     bRows.foreach { r =>
       b1(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray
       b2(r.getInt(0))(r.getInt(1)) = r.getDouble(3)
@@ -578,8 +575,9 @@ object Similarity {
     // lifetime to manage.
     val pAssigned = p.select(col("probe_id"), col("pe"),
       explode(assign(p, "pe", idx.cents, nprobe)).as("cid"))
-    val probed = pAssigned.select(col("cid")).distinct()
-      .collect().map(_.getLong(0))
+    val probed = graft.Bounded.collect(pAssigned.select(col("cid")).distinct(),
+        idx.cents._1.length, "probed lists (nlist)")
+      .map(_.getLong(0))
     val encoded = s.read.parquet(s"${idx.dir}/data")
       .filter(col("cid").isin(probed.map(Long.box): _*))
     val scored = encoded.join(broadcast(pAssigned), Seq("cid"))

@@ -161,13 +161,11 @@ object Alloc {
     // ≤2.6k rows) replays locally over the collected census in exact
     // int64 (§2.4 bounded-metadata collapse, the change-point
     // precedent): running open count in day order, per-month peak/net.
-    val deltas = spans.select(col("open_d").as("d"), lit(1L).as("delta"))
-      .unionAll(spans.select(date_add(col("close_d"), 1).as("d"), lit(-1L).as("delta")))
-      .groupBy(col("d")).agg(sum(col("delta")).as("net"))
-      .collect()
-    require(deltas.length <= 8192,
-      s"${deltas.length} distinct delta days — the calendar bound drifted; " +
-        "revert to the distributed prefix sum")
+    val deltas = graft.Bounded.collect(
+      spans.select(col("open_d").as("d"), lit(1L).as("delta"))
+        .unionAll(spans.select(date_add(col("close_d"), 1).as("d"), lit(-1L).as("delta")))
+        .groupBy(col("d")).agg(sum(col("delta")).as("net")),
+      8192, "distinct delta days in the shipping-load census")
     val byDay = deltas.map(r => (r.getDate(0), r.getLong(1))).sortBy(_._1.getTime)
     var open = 0L
     val monthly = scala.collection.mutable.LinkedHashMap[

@@ -634,14 +634,12 @@ object Corpus {
     // members — all integers until the one closing double division.
     val srcs = agg0.orderBy(col("vol").desc, col("source")).limit(64)
       .select(col("source"))
-    val sk = agg0
-      .join(srcs, Seq("source"), "left_semi")
-      .select(col("source"), explode(col("top")).as("t"))
-      .select(col("source"), col("t._3").as("h"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    require(sk.length <= 64 * k,
-      s"sketchOverlap collected ${sk.length} capped sketch rows — the " +
-        "64-source × k bound no longer holds")
+    val sk = graft.Bounded.collect(agg0
+        .join(srcs, Seq("source"), "left_semi")
+        .select(col("source"), explode(col("top")).as("t"))
+        .select(col("source"), col("t._3").as("h")),
+      64 * k, "capped sketch rows (64 sources × k) in sketchOverlap")
+      .map(r => (r.getString(0), r.getLong(1)))
     val bySrc = sk.groupBy(_._1).map { case (s0, rs) =>
       s0 -> rs.map(_._2).toSet
     }

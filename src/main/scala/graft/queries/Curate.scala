@@ -172,13 +172,10 @@ object Curate {
     // collected census in exact int64: cum/t in day order,
     // s_num = n_days·cum − t·tot, peak by integer comparison (§2.4
     // bounded-metadata collapse, the month-spine precedent).
-    val daily = Tables.orders(s, dir)
-      .groupBy(to_date(col("o_orderdate")).as("d"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    require(daily.length <= 4096,
-      s"${daily.length} distinct order days — the calendar bound drifted; " +
-        "revert to the distributed prefix sum")
+    val daily = graft.Bounded.collect(Tables.orders(s, dir)
+        .groupBy(to_date(col("o_orderdate")).as("d"))
+        .agg(count(lit(1)).as("n")),
+      4096, "distinct order days in the change-point census")
     val byDay = daily.map(r => (r.getDate(0), r.getLong(1))).sortBy(_._1.getTime)
     val totN = byDay.map(_._2).sum
     val nDays = byDay.length.toLong

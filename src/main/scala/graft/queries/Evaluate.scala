@@ -38,7 +38,7 @@ object Evaluate {
     * relation, which also turns every downstream self-join/window in
     * this family into local-relation work (no fact-table lineage under
     * 30+ Exchange nodes per query). Values are exact integer sums, so
-    * every process stages identical rows; a loud require fails the
+    * every process stages identical rows; [[graft.Bounded]] fails the
     * build past 4,096 rows. */
   private def seriesRows(s: SparkSession, dir: String)
       : (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) =
@@ -51,11 +51,8 @@ object Evaluate {
             .cast("bigint")).as("x"),
           sum((col("l_quantity").cast("decimal(18,2)") * 100)
             .cast("bigint")).as("y"))
-      val collected = df.collect() // bounded: ≤ |flags| × |calendar months|
-      require(collected.length <= 4096,
-        s"monthlySeries stage collected ${collected.length} rows — the " +
-          "flag×month bound no longer holds; re-derive before staging")
-      (df.schema, collected)
+      (df.schema, graft.Bounded.collect(df, 4096,
+        "rows (|flags| × |calendar months|) in the monthly series stage"))
     }
 
   private def monthlySeries(s: SparkSession, dir: String): DataFrame = {
@@ -976,16 +973,13 @@ object Evaluate {
     // expectation/variance terms are exact integer floor divisions
     // (BigInt ≡ the DECIMAL(38,0) div chain), and the closing χ²
     // double chain is replayed op for op.
-    val spine = dur.groupBy(col("t"))
-      .agg(sum(col("died") * col("g")).as("d1"), sum(col("died")).as("d"),
-        sum(col("g")).as("leave1"), count(lit(1)).as("leave"))
-      .collect()
+    val spine = graft.Bounded.collect(dur.groupBy(col("t"))
+        .agg(sum(col("died") * col("g")).as("d1"), sum(col("died")).as("d"),
+          sum(col("g")).as("leave1"), count(lit(1)).as("leave")),
+      91, "rows (t = least(dur, 90)) in the logrank spine")
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
       .sortBy(_._1)
-    require(spine.length <= 91,
-      s"logrank spine has ${spine.length} rows — the least(dur, 90) bound " +
-        "no longer holds")
     var n1 = spine.map(_._4).sum
     var n = spine.map(_._5).sum
     val nG1 = n1

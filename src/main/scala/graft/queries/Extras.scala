@@ -310,11 +310,8 @@ object Extras {
         "CAST(l_linenumber AS STRING))), 1, 8), 16, 10) AS BIGINT) " +
         "% 1000000) / 1e6 * ln(1000.0D))) AS BIGINT)").as("zkey"))
       .groupBy(col("zkey")).agg(count(lit(1)).as("true_cnt"))
-      .collect()
-    require(census.length <= 4096,
-      s"zkey census has ${census.length} cells — the [1, 1000) domain " +
-        "bound drifted; revert to the distributed sketch build")
-    val cells = census.map(r => (r.getLong(0), r.getLong(1)))
+    val cells = graft.Bounded.collect(census, 4096, "cells (zkey ∈ [1, 1000)) in the zkey census")
+      .map(r => (r.getLong(0), r.getLong(1)))
     def bucket(r: Int, z: Long): Int =
       (graft.operators.Sketches.hash60(s"$r|$z") % w).toInt
     val counters = new Array[Long](d * w)

@@ -72,7 +72,8 @@ object Featurize {
       totals => totals.select(col("axis"),
           explode(array((1 to 4).map(b =>
             struct(lit(b).as("tname"), cutRank(b).as("t"))): _*)).as("x"))
-        .select(col("axis"), col("x.tname"), col("x.t")))
+        .select(col("axis"), col("x.tname"), col("x.t")),
+      maxGroups = 3, cutsPerGroup = 4)
     // The cut relation is BOUNDED BY CONSTRUCTION (3 axes × 4 ntile
     // boundaries), so the former two aggregate stages + broadcast that
     // reshaped it into per-axis arrays collapse to a collect + literal
@@ -80,12 +81,10 @@ object Featurize {
     // the same 12 (a, k) boundary structs, same order, null where a
     // boundary rank fell outside the group — identical to the former
     // max(when(...)) absorbing an absent row as null).
-    val cutRows = cuts
-      .select(col("axis"), col("tname").cast("int").as("b"),
-        col("cut_value.a").as("a"), col("cut_value.k").as("k"))
-      .collect()
-    require(cutRows.length <= 12,
-      s"${cutRows.length} cut rows — the 3-axis × 4-boundary bound drifted")
+    val cutRows = graft.Bounded.collect(cuts
+        .select(col("axis"), col("tname").cast("int").as("b"),
+          col("cut_value.a").as("a"), col("cut_value.k").as("k")),
+      12, "cut rows (3 axes × 4 boundaries) in the RFM cuts")
     val byAxis = cutRows.groupBy(_.getString(0))
     def cutArr(axis: String): Column = array((1 to 4).map { b =>
       byAxis.getOrElse(axis, Array.empty[org.apache.spark.sql.Row])
@@ -249,7 +248,7 @@ object Featurize {
     * invariance. */
   def pcaProject(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val cov = pcaCov(s, dir).collect()
+    val cov = graft.Bounded.collect(pcaCov(s, dir), 64 * 65 / 2, "cells (i ≤ j) in the PCA covariance")
       .map(r => (r.getInt(0), r.getInt(1), r.getLong(3).toDouble))
     val v = graft.operators.Pca.topComponent(64, cov.toSeq)
     val vf = typedLit(v.map(_.toFloat).toSeq)
@@ -484,9 +483,9 @@ object Featurize {
     // each round (the operators/Ranked convention): assignment becomes
     // ONE narrow codegen'd projection — no crossJoin, no shuffle of
     // the vector arrays, no broadcast subtree to re-execute.
-    var cents: Seq[(Int, Seq[Long])] = vecs.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int"), col("v"))
-      .collect().toSeq
+    var cents: Seq[(Int, Seq[Long])] = graft.Bounded.collect(
+        vecs.filter(col("vec_id") < k).select(col("vec_id").cast("int"), col("v")),
+        k, "seed centroids (vec_id < k) in k-means").toSeq
       .map(r => (r.getInt(0), r.getSeq[Long](1)))
       .sortBy(_._1)
     // empty corpus → no seeds → an empty centroid literal would type
@@ -506,13 +505,13 @@ object Featurize {
         lit(0L), (acc, x) => acc + x).as("d"),
         s.getField("cid").as("cid"))))
     (1 to rounds).foreach { _ =>
-      cents = vecs.select(dc.getField("cid").as("cid"), col("v"))
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(floor(sum(col("col")).cast("double") / count(lit(1)))
-          .cast("bigint").as("cv"))
-        // k × dims rows back to the driver — bounded metadata
-        .collect().toSeq
+      cents = graft.Bounded.collect(vecs.select(dc.getField("cid").as("cid"), col("v"))
+          .select(col("cid"), posexplode(col("v")))
+          .groupBy(col("cid"), col("pos"))
+          .agg(floor(sum(col("col")).cast("double") / count(lit(1)))
+            .cast("bigint").as("cv")),
+          cents.length * cents.map(_._2.length).max,
+          "centroid cells (k × dims) in a k-means round").toSeq
         .groupBy(_.getInt(0))
         .map { case (cid, rows) =>
           (cid, rows.sortBy(_.getInt(1)).map(_.getLong(2))) }

@@ -765,16 +765,13 @@ object Infer {
     // (2·rnk + t − 1), BigInt rank-sum squares ≡ the DECIMAL(38,0)
     // sums, and the closing χ²/tie-correction double chain replayed
     // op for op under the same round(6).
-    val cells = Tables.orders(s, dir)
-      .groupBy(date_trunc("month", to_date(col("o_orderdate"))).as("blk"),
-        col("o_orderpriority").as("trt"))
-      .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("bigint")).as("v"))
-      .collect()
+    val cells = graft.Bounded.collect(Tables.orders(s, dir)
+        .groupBy(date_trunc("month", to_date(col("o_orderdate"))).as("blk"),
+          col("o_orderpriority").as("trt"))
+        .agg(sum((col("o_totalprice").cast("decimal(18,2)") * 100)
+          .cast("bigint")).as("v")),
+      4096, "cells (months × priorities) in the Friedman blocks")
       .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2)))
-    require(cells.length <= 4096,
-      s"friedman collected ${cells.length} cells — the month×priority " +
-        "bound no longer holds")
     val k = cells.map(_._2).distinct.length
     val byBlk = cells.groupBy(_._1).filter(_._2.length == k)
     // per complete block: rank() (min rank of each tie group) and the

@@ -573,6 +573,10 @@ object Joins {
       |  CAST(pack // 1000000000 AS BIGINT) AS dist_m
       |FROM m ORDER BY c_custkey""".stripMargin
 
+  /** A grid cell and its eight neighbours. */
+  private def ring(jy: Int, jx: Int): Seq[(Int, Int)] =
+    for { dy <- -1 to 1; dx <- -1 to 1 } yield (jy + dy, jx + dx)
+
   /** SP1 — grid-density watershed clustering: every populated 1°×1°
     * cell of the event point cloud is assigned to its density peak by
     * hill-climbing on the 3×3-smoothed cell counts — the mode-seeking
@@ -611,17 +615,13 @@ object Joins {
     // integer arithmetic, nothing floating anywhere — so the output is
     // row-identical; the oracle still runs its own 7 unrolled
     // doublings in SQL.
-    val cells = Tables.events(s, dir)
-      .select(floor(geoLat("egeo|", col("event_id"))).cast("int").as("jy"),
-        floor(geoLon("egeo|", col("event_id"))).cast("int").as("jx"))
-      .groupBy(col("jy"), col("jx")).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    require(cells.length <= 4096,
-      s"spatialWatershed grid collected ${cells.length} cells — the " +
-        "coin-range bound no longer holds; re-derive before collecting")
+    val cells = graft.Bounded.collect(Tables.events(s, dir)
+        .select(floor(geoLat("egeo|", col("event_id"))).cast("int").as("jy"),
+          floor(geoLon("egeo|", col("event_id"))).cast("int").as("jx"))
+        .groupBy(col("jy"), col("jx")).agg(count(lit(1)).as("cnt")),
+      4096, "cells (coin range) in the spatialWatershed grid")
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     val cnt = cells.map(c => (c._1, c._2) -> c._3).toMap
-    def ring(jy: Int, jx: Int): Seq[(Int, Int)] =
-      for { dy <- -1 to 1; dx <- -1 to 1 } yield (jy + dy, jx + dx)
     // smoothed density: each present cell's 3×3 sum of present counts
     val sm: Map[(Int, Int), Long] = cells.map { case (jy, jx, _) =>
       (jy, jx) -> ring(jy, jx).flatMap(cnt.get).sum
@@ -831,20 +831,16 @@ object Joins {
     // — and everything is 64-bit integer arithmetic, so the output is
     // row-identical; the oracle keeps its recursive transitive
     // closure.
-    val base = Tables.events(s, dir)
-      .select(floor(lat).cast("int").as("jy"), floor(lon).cast("int").as("jx"))
-      .groupBy(col("jy"), col("jx")).agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
-    require(base.length <= 4096,
-      s"dbscanGrid grid collected ${base.length} cells — the coin-range " +
-        "bound no longer holds; re-derive before collecting")
+    val base = graft.Bounded.collect(Tables.events(s, dir)
+        .select(floor(lat).cast("int").as("jy"), floor(lon).cast("int").as("jx"))
+        .groupBy(col("jy"), col("jx")).agg(count(lit(1)).as("n")),
+      4096, "cells (coin range) in the dbscanGrid grid")
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     val t = base.map(_._3).sum
     def id(jy: Int, jx: Int): Long = jy.toLong * 100 + jx
     val dense = base.filter { case (_, _, n) => n * 50 >= t }
     val nond = base.filter { case (_, _, n) => n * 50 < t }
     val denseIds = dense.map { case (jy, jx, _) => (jy, jx) -> id(jy, jx) }.toMap
-    def ring(jy: Int, jx: Int): Seq[(Int, Int)] =
-      for { dy <- -1 to 1; dx <- -1 to 1 } yield (jy + dy, jx + dx)
     // components of 8-adjacent core cells: min-id label fixpoint
     // (== dedupClusters' min-label propagation result)
     val label = scala.collection.mutable.Map[Long, Long]()

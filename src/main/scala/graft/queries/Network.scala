@@ -156,7 +156,7 @@ object Network {
       (src, dst, if (wtot == 0) 0L else w * 1000000L / wtot)
     }
     val nations = Tables.nation(s, dir).select(col("n_nationkey").as("node"))
-    val nodeKeys = nations.collect() // |nations| — bounded metadata
+    val nodeKeys = graft.Bounded.collect(nations, TradeGraph.maxNations, "nations in the HITS nodes")
       .map(_.getAs[Number]("node").longValue).toSeq
     val unit = 1000000000000L
     def normalize(raw: Map[Long, Long]): Map[Long, Long] = {

@@ -450,11 +450,9 @@ object Quality {
       // downstream — ties among equal cents rank arbitrarily but read
       // identically
       .select(col("l_returnflag"), col("e._3").as("cents"))
-      .collect()
-    require(sampled.length <= 16 * k,
-      s"${sampled.length} sampled rows — the k·|flag enum| bound drifted; " +
-        "revert to the distributed read-out")
-    val rows = sampled.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
+    val samples = graft.Bounded.collect(sampled, 16 * k,
+      "sampled rows (k × |flag enum|) in the grouped quantile samples")
+    val rows = samples.groupBy(_.getString(0)).toSeq.sortBy(_._1).map {
       case (flag, rs) =>
         val cents = rs.map(_.getLong(1)).sorted
         val m = cents.length.toLong

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Staged, Tables}
+import graft.{Bounded, Staged, Tables}
 
 /** The nation trade graph's fact collapse, staged ONCE per fixture dir
   * and process — the cross-query sharing layer for the eight graph
@@ -20,15 +20,15 @@ import graft.{Staged, Tables}
   * (memoized per dir through [[graft.Staged]]).
   *
   * 100 TB posture: the memo holds ≤625 (int,int,long) tuples per dir,
-  * and a loud require fails the build past that bound — driver memory
+  * and [[graft.Bounded]] fails the build past that bound — driver memory
   * is never a function of corpus size. The star join itself stays
   * fully distributed (dimension sides broadcast) and runs exactly once
   * per process instead of once per query.
   */
 object TradeGraph {
 
-  /** |nations|² for the 25 TPC-H nations. */
-  private val maxEdges = 625
+  /** The 25 TPC-H nations. */
+  val maxNations = 25
 
   /** Directed collapse (src = c_nationkey, dst = s_nationkey,
     * w = lineitem count), self-loops kept — the superset every
@@ -39,7 +39,7 @@ object TradeGraph {
         .select(col("c_custkey"), col("c_nationkey"))
       val supp = Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_nationkey"))
-      val collected = Tables.lineitem(s, dir)
+      val edges = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -47,11 +47,9 @@ object TradeGraph {
         .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
         .agg(count(lit(1)).as("w"))
-        .collect()
-      require(collected.length <= maxEdges,
-        s"trade graph stage collected ${collected.length} edges — the " +
-          s"|nations|² ≤ $maxEdges bound no longer holds; re-derive before staging")
-      collected.map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      Bounded.collect(edges, maxNations * maxNations,
+          "edges (|nations|²) in the trade graph stage")
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
     }
 
   /** [[directed]] as a local relation (src int, dst int, w long) —

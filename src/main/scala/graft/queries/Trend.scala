@@ -536,13 +536,11 @@ object Trend {
     // only distributed work. Identical arithmetic: exact integer
     // at-risk counts, the same floor(ln(..)·1e12) fixed-point log
     // terms (math.log/math.exp ARE Spark's ln/exp), same zeroed cap.
-    val spine = dur.groupBy(col("t"))
-      .agg(sum(col("died")).as("d"), sum(lit(1L) - col("died")).as("c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    val spine = graft.Bounded.collect(dur.groupBy(col("t"))
+        .agg(sum(col("died")).as("d"), sum(lit(1L) - col("died")).as("c")),
+      91, "rows (t = least(dur, 90)) in the survivalCurve spine")
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
-    require(spine.length <= 91,
-      s"survivalCurve spine has ${spine.length} rows — the least(dur, 90) " +
-        "bound no longer holds")
     val totalLeave = spine.map(t => t._2 + t._3).sum
     var atRisk = totalLeave
     var lqCum = 0L
@@ -817,7 +815,9 @@ object Trend {
     // one-wide-row expression tree produced, without its 8
     // localCheckpoint jobs (~0.1 s each) per query. The oracle still
     // replays the identical 16 rounds in SQL.
-    val pRows = probs.collect() // bounded: ≤ |state enum|² cells
+    val states = (sources ++ targets).distinct.length
+    val pRows = graft.Bounded.collect(probs, states * states,
+      "cells (|state enum|²) in the attribution matrix")
     // loud coverage guard (unchanged semantics): any transition mass
     // OUTSIDE the fixed enum would silently vanish at the pivot while
     // still inflating tn — fail the query instead

@@ -268,9 +268,9 @@ object Warehouse {
     // so the totals accumulate DRIVER-side in the same sorted
     // (lang, source) order the oracle's cumsum windows walk — both
     // engines add the same IEEE terms in the same sequence.
-    val cells = Tables.documents(s, dir)
-      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o"))
-      .collect()
+    val cells = graft.Bounded.collect(Tables.documents(s, dir)
+        .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("o")),
+      64 * 64, "cells (≤ 64 langs × ≤ 64 sources) in the contingency grid")
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val langs = cells.map(_._1).distinct.sorted
     val sources = cells.map(_._2).distinct.sorted

@@ -300,4 +300,11 @@ class BenchFormatSpec extends AnyFunSuite {
       assert(line.contains("1.500") && !line.contains("1,500"))
     } finally java.util.Locale.setDefault(prev)
   }
+
+  test("the history merge leaves an errored query's committed min alone") {
+    val hist = Map("q_a" -> 1.0, "q_b" -> 2.0)
+    val walls = Seq("q_a" -> 0.5, "q_b" -> 0.001, "q_c" -> 0.7)
+    assert(Bench.mergeHistory(hist, walls, Set("q_b")) ==
+      Map("q_a" -> 0.5, "q_b" -> 2.0, "q_c" -> 0.7))
+  }
 }

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Staged.scratch]], so no hand-built `/tmp` path (keyed by an
   * application id, a pid or a fixture name) comes back, and every
   * parquet reader or writer the migration path opens reuses a Hadoop
-  * conf, so no per-file `Configuration` parse comes back. */
+  * conf, so no per-file `Configuration` parse comes back, and every
+  * driver-side collect in queries/ and operators/ states its bound
+  * through [[Bounded.collect]]. */
 class StagedGuardSpec extends AnyFunSuite {
 
   private val roots = Seq("queries", "operators", "etl")
@@ -65,6 +67,16 @@ class StagedGuardSpec extends AnyFunSuite {
     // every allow-list entry still names a line, so the list cannot rot
     val unused = allowed.filterNot(a => hits.exists(_._2.contains(a)))
     assert(unused.isEmpty, s"allow-list entries that match no line: $unused")
+  }
+
+  test("every driver collect in queries/ or operators/ goes through Bounded") {
+    // `.collect { … }`, Scala's partial-function collect, is not matched
+    val hits = lines().collect {
+      case (f, line, n) if line.contains(".collect()") &&
+          Seq("queries", "operators").exists(p => f.getParent.endsWith(p)) &&
+          f.getFileName.toString != "Bounded.scala" => s"$f:$n"
+    }
+    assert(hits.isEmpty, s"raw DataFrame collects outside Bounded.collect:\n${hits.mkString("\n")}")
   }
 
   private val parquetOpen =
