@@ -50,12 +50,11 @@ import graft.Caches.PersistScoped
   * in `order` (typically the order key itself, or a struct of it), or
   * the min is not "the value at the crossing". The group domain must
   * be enum-scale (return flags, axis tags — percentile-family
-  * semantics): at most `maxGroups` groups and `cutsPerGroup` threshold
-  * rows per group, both [[enumScale]] unless the caller states its
-  * own, and [[graft.Bounded]] fails the build past them; for unbounded
-  * group domains rank every row with [[groupRanks]] instead.
-  * `thresholds` maps the per-group totals
-  * relation (group columns + `tw` = Σ weight) to threshold rows
+  * semantics): the caller states at most `maxGroups` groups and
+  * `cutsPerGroup` threshold rows per group, and [[graft.Bounded]]
+  * fails the build past them; for unbounded group domains rank every
+  * row with [[groupRanks]] instead. `thresholds` maps the per-group
+  * totals relation (group columns + `tw` = Σ weight) to threshold rows
   * (group columns, `tname` label, `t` BIGINT); thresholds outside
   * [1, tw] silently produce no row. Duplicate `t` values yield one
   * row per tname (callers wanting rank-collapse semantics dedupe
@@ -63,9 +62,6 @@ import graft.Caches.PersistScoped
   * the range exchange samples its child in a separate job.
   */
 object Ranked {
-
-  /** The cut forms' default group and per-group threshold bound. */
-  val enumScale = 64
 
   /** Adds explicit global rank `rnk` (1-based) and group size `grp_n`
     * to every row of `df` under `order` within `group`: range-
@@ -151,8 +147,7 @@ object Ranked {
   def cutValuesByRank(df: DataFrame, group: Seq[String], order: Seq[Column],
                       value: Column,
                       thresholds: DataFrame => DataFrame,
-                      maxGroups: Int = enumScale,
-                      cutsPerGroup: Int = enumScale): DataFrame = {
+                      maxGroups: Int, cutsPerGroup: Int): DataFrame = {
     val s = df.sparkSession
     val keys = group.map(col) ++ order
     val width = Tables.shuffleWidth(s)
@@ -191,8 +186,7 @@ object Ranked {
   def cutValues(df: DataFrame, group: Seq[String], order: Seq[Column],
                 weight: Column, value: Column,
                 thresholds: DataFrame => DataFrame,
-                maxGroups: Int = enumScale,
-                cutsPerGroup: Int = enumScale): DataFrame = {
+                maxGroups: Int, cutsPerGroup: Int): DataFrame = {
     val s = df.sparkSession
     val keys = group.map(col) ++ order
     // finer than the session width on purpose: the crossing window

@@ -146,8 +146,11 @@ object Similarity {
   /** Driver-pinned centroid set: (cid, quantized components, c·c). */
   private type Cents = (Array[Long], Array[Array[Float]], Array[Double])
 
-  /** Default `maxLists`: the most lists (seed values) IVF may train. */
-  val defaultMaxLists = 1024
+  /** The most inverted lists (seed values) IVF trains or loads. */
+  private val maxLists = 1024
+
+  /** The most codebook rows (nSub × codesPerSub) an index loads. */
+  private val maxBookRows = 1 << 16
 
   /** 1e-6 fixed-point quantization of a mean vector plus its squared
     * norm — the ONE shared quantum both the coarse quantizer and the
@@ -199,8 +202,7 @@ object Similarity {
     * and the index costs `iterations` corpus passes, not
     * iterations+1. Returns (final centroids, assigned lists); `lists`
     * is persisted — the CALLER must unpersist it when done. */
-  private def trainCoarse(cand: DataFrame, dims: Int, iterations: Int,
-                          maxLists: Int): (Cents, DataFrame) = {
+  private def trainCoarse(cand: DataFrame, dims: Int, iterations: Int): (Cents, DataFrame) = {
     require(iterations >= 1, "coarse quantizer needs at least one Lloyd step")
     val vm = udaf(new VectorMean(dims))
     var cents = collectCents(cand.groupBy(col("seed").as("cid"))
@@ -253,9 +255,8 @@ object Similarity {
     * registry). */
   def ivfTopK(probes: DataFrame, candidates: DataFrame, k: Int,
               nprobe: Int = 2, iterations: Int = 1, dims: Int = 64,
-              seedCol: String = "label",
-              maxLists: Int = defaultMaxLists): DataFrame =
-    withCoarse(candidates, iterations, dims, seedCol, maxLists) { (_, cents, lists) =>
+              seedCol: String = "label"): DataFrame =
+    withCoarse(candidates, iterations, dims, seedCol) { (_, cents, lists) =>
       val p = probes.filter(col("embedding").isNotNull)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       val pAssigned = p.select(col("probe_id"), col("pe"),
@@ -272,7 +273,7 @@ object Similarity {
     * corpus projection `cand`, the trained centroids and the persisted
     * inverted lists, released once `f` has built its result. */
   private def withCoarse[T](candidates: DataFrame, iterations: Int, dims: Int,
-      seedCol: String, maxLists: Int)(f: (DataFrame, Cents, DataFrame) => T): T = {
+      seedCol: String)(f: (DataFrame, Cents, DataFrame) => T): T = {
     require(candidates.schema(seedCol).dataType
         .isInstanceOf[org.apache.spark.sql.types.NumericType],
       s"coarse quantizer seed column '$seedCol' must be numeric (cast to " +
@@ -291,7 +292,7 @@ object Similarity {
         col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col(seedCol).cast("bigint").as("seed")).persist()
     try {
-      val (cents, lists) = trainCoarse(cand, dims, iterations, maxLists)
+      val (cents, lists) = trainCoarse(cand, dims, iterations)
       try f(cand, cents, lists) finally lists.unpersist()
     } finally cand.unpersist()
   }
@@ -430,10 +431,9 @@ object Similarity {
   def ivfPqTopK(probes: DataFrame, candidates: DataFrame, k: Int,
                 nprobe: Int = 2, iterations: Int = 1,
                 nSub: Int = 16, codesPerSub: Int = 32, pqIterations: Int = 2,
-                dims: Int = 64, seedCol: String = "label",
-                maxLists: Int = defaultMaxLists): DataFrame =
+                dims: Int = 64, seedCol: String = "label"): DataFrame =
     withIvfPqTraining(candidates, nSub, codesPerSub, iterations,
-        pqIterations, dims, seedCol, maxLists) { (cents, lists, books) =>
+        pqIterations, dims, seedCol) { (cents, lists, books) =>
       // the inverted-list file of a real deployment: (cid, id, codes)
       // — at 100 TB written bucketed by cid, ~10 bytes/row (the
       // persistent form IS [[buildIndex]]'s data relation).
@@ -459,10 +459,10 @@ object Similarity {
     * copies). */
   private def withIvfPqTraining[T](candidates: DataFrame, nSub: Int,
       codesPerSub: Int, iterations: Int, pqIterations: Int, dims: Int,
-      seedCol: String, maxLists: Int)(f: (Cents, DataFrame, Books) => T): T = {
+      seedCol: String)(f: (Cents, DataFrame, Books) => T): T = {
     require(dims % nSub == 0,
       s"dims=$dims must divide into nSub=$nSub subspaces (see pqTopK)")
-    withCoarse(candidates, iterations, dims, seedCol, maxLists) { (cand, cents, lists) =>
+    withCoarse(candidates, iterations, dims, seedCol) { (cand, cents, lists) =>
       f(cents, lists, trainBooks(cand, nSub, codesPerSub, dims / nSub, pqIterations))
     }
   }
@@ -493,10 +493,11 @@ object Similarity {
   def buildIndex(candidates: DataFrame, dir: String,
                  nSub: Int = 16, codesPerSub: Int = 32,
                  iterations: Int = 1, pqIterations: Int = 2,
-                 dims: Int = 64, seedCol: String = "label",
-                 maxLists: Int = defaultMaxLists): Unit =
+                 dims: Int = 64, seedCol: String = "label"): Unit = {
+    require(nSub * codesPerSub <= maxBookRows, s"nSub × codesPerSub = " +
+      s"${nSub * codesPerSub} codebook rows, past the $maxBookRows loadIndex reads")
     withIvfPqTraining(candidates, nSub, codesPerSub, iterations,
-        pqIterations, dims, seedCol, maxLists) { (cents, lists, books) =>
+        pqIterations, dims, seedCol) { (cents, lists, books) =>
       val s = candidates.sparkSession
       lists.select(col("neighbor_id"),
           encodeCol(lists, "ce", books).as("codes"), col("cid"))
@@ -523,28 +524,27 @@ object Similarity {
           StructField("c2", DoubleType))))
         .write.mode("overwrite").parquet(s"$dir/books")
     }
+  }
 
-  /** Driver-pinned index metadata re-read from a [[buildIndex]] dir;
-    * `nSub`, `codesPerSub` and `maxLists` are the ones it was built
-    * with, and bound the collected centroids and codebooks. */
+  /** Driver-pinned index metadata re-read from a [[buildIndex]] dir. */
   final class Index private[Similarity] (
       private[Similarity] val dir: String,
       private[Similarity] val cents: Cents,
       private[Similarity] val books: Books)
 
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                nSub: Int = 16, codesPerSub: Int = 32,
-                maxLists: Int = defaultMaxLists): Index = {
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
     val cRows = graft.Bounded.collect(spark.read.parquet(s"$dir/cents"),
         maxLists, "index centroids (maxLists)")
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
     val cents: Cents = (cRows.map(_._1), cRows.map(_._2), cRows.map(_._3))
     val bRows = graft.Bounded.collect(spark.read.parquet(s"$dir/books"),
-      nSub * codesPerSub, "index codebook centroids (nSub × codesPerSub)")
+      maxBookRows, "index codebook centroids (nSub × codesPerSub)")
+    val nSub = bRows.map(_.getInt(0)).max + 1
+    val nCode = bRows.map(_.getInt(1)).max + 1
     val dims0 = bRows.head.getSeq[Float](2).length
-    val b1 = Array.fill(nSub, codesPerSub)(Array.fill(dims0)(0f))
-    val b2 = Array.fill(nSub, codesPerSub)(0.0)
+    val b1 = Array.fill(nSub, nCode)(Array.fill(dims0)(0f))
+    val b2 = Array.fill(nSub, nCode)(0.0)
     bRows.foreach { r =>
       b1(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray
       b2(r.getInt(0))(r.getInt(1)) = r.getDouble(3)

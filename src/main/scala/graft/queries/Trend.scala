@@ -815,9 +815,8 @@ object Trend {
     // one-wide-row expression tree produced, without its 8
     // localCheckpoint jobs (~0.1 s each) per query. The oracle still
     // replays the identical 16 rounds in SQL.
-    val states = (sources ++ targets).distinct.length
-    val pRows = graft.Bounded.collect(probs, states * states,
-      "cells (|state enum|²) in the attribution matrix")
+    val pRows = graft.Bounded.collect(probs, sources.length * targets.length,
+      "cells (|sources| × |targets|) in the attribution matrix")
     // loud coverage guard (unchanged semantics): any transition mass
     // OUTSIDE the fixed enum would silently vanish at the pivot while
     // still inflating tn — fail the query instead

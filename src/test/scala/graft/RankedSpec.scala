@@ -41,7 +41,8 @@ class RankedSpec extends SparkSpec {
       totals => totals.select(col("g"),
           explode(array(ts.map { case (n, t) =>
             struct(lit(n).as("tname"), lit(t).as("t")) }: _*)).as("x"))
-        .select(col("g"), col("x.tname"), col("x.t"))))
+        .select(col("g"), col("x.tname"), col("x.t")),
+      maxGroups = 1, cutsPerGroup = ts.size))
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         r.getAs[Long]("cut_value")).toMap
 
@@ -64,13 +65,15 @@ class RankedSpec extends SparkSpec {
     val d = df(Seq(("a", 1L), ("a", 2L), ("a", 3L), ("b", 20L), ("b", 10L)))
     val med = Caches.own(Ranked.cutValuesByRank(d, Seq("g"), Seq(col("v")), col("v"),
       totals => totals.select(col("g"), lit("med").as("tname"),
-        ceil(col("tw") * 0.5).cast("bigint").as("t"))))
+        ceil(col("tw") * 0.5).cast("bigint").as("t")),
+      maxGroups = 2, cutsPerGroup = 1))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("cut_value")).toMap
     assert(med === Map("a" -> 2L, "b" -> 10L))
     // tw rides along on the output
     val tw = Caches.own(Ranked.cutValuesByRank(d, Seq("g"), Seq(col("v")), col("v"),
       totals => totals.select(col("g"), lit("med").as("tname"),
-        ceil(col("tw") * 0.5).cast("bigint").as("t"))))
+        ceil(col("tw") * 0.5).cast("bigint").as("t")),
+      maxGroups = 2, cutsPerGroup = 1))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("tw")).toMap
     assert(tw === Map("a" -> 3L, "b" -> 2L))
   }
@@ -83,7 +86,8 @@ class RankedSpec extends SparkSpec {
     def at(t: Long): Long =
       Caches.own(Ranked.cutValues(d, Seq("g"), Seq(col("v")), col("w"), col("v"),
         totals => totals.select(col("g"), lit(s"t$t").as("tname"),
-          lit(t).as("t"))))
+          lit(t).as("t")),
+        maxGroups = 1, cutsPerGroup = 1))
         .collect().map(_.getAs[Long]("cut_value")).head
     assert(at(1L) === 1L)
     assert(at(3L) === 1L)  // cum(1)=3 >= 3
@@ -98,7 +102,8 @@ class RankedSpec extends SparkSpec {
     val w = Caches.own(Ranked.cutValues(
       Seq.empty[(String, Long, Long)].toDF("g", "v", "w"),
       Seq("g"), Seq(col("v")), col("w"), col("v"),
-      totals => totals.select(col("g"), lit("x").as("tname"), lit(1L).as("t"))))
+      totals => totals.select(col("g"), lit("x").as("tname"), lit(1L).as("t")),
+      maxGroups = 1, cutsPerGroup = 1))
     assert(w.collect().isEmpty)
   }
 
@@ -116,11 +121,11 @@ class RankedSpec extends SparkSpec {
       totals.select(col("g"), lit("q37").as("tname"),
         ceil(col("tw") * 0.37).cast("bigint").as("t"))
     val byRank = Caches.own(Ranked.cutValuesByRank(
-        d, Seq("g"), Seq(col("v")), col("v"), th))
+        d, Seq("g"), Seq(col("v")), col("v"), th, maxGroups = 2, cutsPerGroup = 1))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("cut_value")).toMap
     val weighted = Caches.own(Ranked.cutValues(
         d.withColumn("w", lit(1L)), Seq("g"), Seq(col("v")), col("w"),
-        col("v"), th))
+        col("v"), th, maxGroups = 2, cutsPerGroup = 1))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("cut_value")).toMap
     assert(byRank === expected)
     assert(weighted === expected)

@@ -108,7 +108,8 @@ class RetrySpec extends SparkSpec {
       Caches.own(operators.Ranked.cutValuesByRank(d, Seq("g"),
         Seq(col("v")), col("v"),
         t => t.select(col("g"), lit("med").as("tname"),
-          ceil(col("tw") * 0.5).cast("bigint").as("t"))))
+          ceil(col("tw") * 0.5).cast("bigint").as("t")),
+        maxGroups = 3, cutsPerGroup = 1))
         .collect().map(r => r.getAs[String]("g") -> r.get(r.fieldIndex("cut_value")))
         .toMap
     assert(med(flaky(src)) == med(src))
@@ -117,7 +118,8 @@ class RetrySpec extends SparkSpec {
         d.withColumn("w", lit(2L)), Seq("g"), Seq(col("v")), col("w"),
         col("v"),
         t => t.select(col("g"), lit("med").as("tname"),
-          expr("(tw + 1) DIV 2").as("t"))))
+          expr("(tw + 1) DIV 2").as("t")),
+        maxGroups = 3, cutsPerGroup = 1))
         .collect().map(r => r.getAs[String]("g") -> r.get(r.fieldIndex("cut_value")))
         .toMap
     assert(wmed(flaky(src)) == wmed(src))

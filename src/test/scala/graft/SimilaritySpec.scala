@@ -117,6 +117,25 @@ class SimilaritySpec extends SparkSpec {
     assert(rows(Similarity.searchIndex(idx, probes, 5, nprobe = 6)) == fromDisk)
   }
 
+  test("persistent IVF-PQ index: a non-default codebook shape loads and searches like the direct build") {
+    // loadIndex reads the codebook shape from the stored books: more
+    // subspaces (32 × 8) and more codes per subspace (8 × 64) than the
+    // 16 × 32 default both load without extra arguments
+    val emb = Tables.embeddings(spark, sfDir)
+    val probes = emb.filter(col("vec_id") < 10)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("probe_id"), col("rnk")).collect().map(_.toSeq).toSeq
+    for ((nSub, codes) <- Seq((32, 8), (8, 64))) {
+      val dir = s"${tempDir("graft-ivfpq")}/index"
+      Similarity.buildIndex(emb, dir, nSub = nSub, codesPerSub = codes)
+      val fromDisk = rows(Similarity.searchIndex(Similarity.loadIndex(spark, dir),
+        probes, 5, nprobe = 6))
+      assert(fromDisk.nonEmpty)
+      assert(fromDisk == rows(Similarity.ivfPqTopK(probes, emb, 5, nprobe = 6,
+        nSub = nSub, codesPerSub = codes)), s"nSub=$nSub codesPerSub=$codes")
+    }
+  }
+
   test("custom dot_f32 expression equals HOF dot bit-for-bit") {
     GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sfDir).limit(50)
