@@ -53,14 +53,15 @@ object Bench {
     ms
   }
 
-  /** (process CPU seconds, cumulative GC seconds) — for Dev's per-rep
-    * wall attribution. */
+  /** (process CPU seconds, cumulative GC seconds) — the per-query
+    * {cpu, gc} of the sweep and Dev's per-rep wall attribution. A
+    * collector that does not report its time reads -1; it counts 0. */
   def snapshot(): (Double, Double) = {
     import scala.jdk.CollectionConverters._
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val gc = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+      .getGarbageCollectorMXBeans.asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
     (os.getProcessCpuTime / 1e9, gc / 1e3)
   }
 
@@ -120,36 +121,31 @@ object Bench {
     * one alphabetical window that way — q_dedup_hops read 10.3 s
     * against a 2.0 s committed history and was never rerun). The
     * committed history makes it one map lookup: any query whose wall
-    * exceeds `factor`× its committed-history wall joins the rerun queue
+    * exceeds 2.5× its committed-history wall joins the rerun queue
     * regardless of window flags. The floor skips sub-50 ms queries,
     * whose ratios are scheduling noise. */
   def historyOutliers(raw: Seq[(String, Sample)],
-                      history: Map[String, Double],
-                      factor: Double = 2.5,
-                      floorSec: Double = 0.05): Seq[String] =
+                      history: Map[String, Double]): Seq[String] =
     raw.collect {
       case (n, s) if history.get(n).exists(h =>
-        h >= floorSec && s.wall > factor * h) => n
+        h >= outlierFloorSec && s.wall > outlierFactor * h) => n
     }
+
+  private val outlierFactor = 2.5
+  private val outlierFloorSec = 0.05
 
   /** Committed per-query history for [[historyOutliers]]:
     * BENCH_HISTORY.json is a flat {"q_x": wall} map holding the
     * per-query MIN across committed sweeps (the best honest estimate of
     * what each query costs on this box — a min can only tighten, never
-    * flatter). Falls back to BENCH_LOCAL.json's detailed record when
-    * the history file is absent. Parsed with a regex, not a JSON
-    * library: both files are this object's own single-line output. */
-  def loadHistory(): Map[String, Double] = {
-    def parse(path: String, pat: scala.util.matching.Regex): Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-        pat.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    val flat = parse("BENCH_HISTORY.json", """"(q_[A-Za-z0-9_]+)":([0-9.]+)""".r)
-    if (flat.nonEmpty) flat
-    else parse("BENCH_LOCAL.json", """"(q_[A-Za-z0-9_]+)":\{"wall":([0-9.]+)""".r)
-  }
+    * flatter); empty when the file is absent. Parsed with a regex, not
+    * a JSON library: the file is this object's own single-line output. */
+  def loadHistory(): Map[String, Double] =
+    try {
+      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_HISTORY.json"))
+      """"(q_[A-Za-z0-9_]+)":([0-9.]+)""".r.findAllMatchIn(txt)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    } catch { case _: Throwable => Map.empty }
 
   /** BENCH_HISTORY's min-merge: per query, the lower of its committed
     * min and this sweep's wall. A query that threw is left out: its
@@ -175,25 +171,25 @@ object Bench {
     * one — degradation that starts mid-window shows up in the trailing
     * probe, and without it the LAST window would be a complete blind
     * spot) ran >1.35× the sweep's CPU reference (its fastest observed
-    * probe — relative detection, no hard-coded host history;
-    * SPARK_GRAFT_PROBE_REF_MS can pin an external reference when the
-    * WHOLE sweep is suspected slow), OR >1.6× the engine reference
-    * (the engine probe is noisier — scheduler jitter — so its factor
-    * is looser; it exists to catch the memory/IO contention the CPU
-    * spin cannot see). Probe sequences are FENCEPOSTS: length =
-    * windows + 1 (one before each window plus one after the last). */
+    * probe — relative detection, no hard-coded host history), OR
+    * >1.6× the engine reference (the engine probe is noisier —
+    * scheduler jitter — so its factor is looser; it exists to catch the
+    * memory/IO contention the CPU spin cannot see). Probe sequences are
+    * FENCEPOSTS: length = windows + 1 (one before each window plus one
+    * after the last). */
   def degradedWindows(probes: Seq[Double], refMs: Double,
-                      factor: Double = 1.35,
                       engineProbes: Seq[Double] = Seq.empty,
-                      engineRefMs: Double = 0.0,
-                      engineFactor: Double = 1.6): Seq[Int] = {
+                      engineRefMs: Double = 0.0): Seq[Int] = {
     def borderBad(ps: Seq[Double], ref: Double, f: Double): Seq[Int] =
       if (ps.size < 2 || ref <= 0) Seq.empty
       else (0 until ps.size - 1).filter(i =>
         ps(i) > f * ref || ps(i + 1) > f * ref)
-    (borderBad(probes, refMs, factor) ++
+    (borderBad(probes, refMs, cpuFactor) ++
       borderBad(engineProbes, engineRefMs, engineFactor)).distinct.sorted
   }
+
+  private val cpuFactor = 1.35
+  private val engineFactor = 1.6
 
   /** Probe evidence (slow cycles) now counts as contention alongside
     * the descheduling shape (wall ≫ cpu+gc on ≥3 queries). */
@@ -324,30 +320,24 @@ object Bench {
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (k, _) => names(k) })
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val loadStart = osBean.getSystemLoadAverage
     val probeStart = cpuProbeMs()
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(b => math.max(b.getCollectionTime, 0L)).sum
-    }
     // A query that THROWS is timed near-zero — fast-because-broken would
     // otherwise flatter the total silently. Record the exception class
     // per query; the emitted `errors`/`errors_n` fields make a broken
-    // query loud on every rendered line, its wall stays out of
+    // query loud on the line and in the record, its wall stays out of
     // BENCH_HISTORY and the sweep exits non-zero (the oracle gate still
     // catches the correctness side, this is the bench-side tripwire).
     val queryErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timeOne(name: String,
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
       val w0 = System.nanoTime()
-      val c0 = osBean.getProcessCpuTime
-      val g0 = gcMillis
+      val (c0, g0) = snapshot()
       try { fn(spark, sfDir).count() }
       catch { case t: Throwable => queryErrors(name) = t.getClass.getSimpleName }
-      val sample = Sample((System.nanoTime() - w0) / 1e9,
-        (osBean.getProcessCpuTime - c0) / 1e9, (gcMillis - g0) / 1e3)
+      val wall = (System.nanoTime() - w0) / 1e9
+      val (c1, g1) = snapshot()
+      val sample = Sample(wall, c1 - c0, g1 - g0)
       // Scoped caches self-release when the action completes (Caches);
       // drain() + clearCache() is the harness belt-and-braces for
       // plans that errored before their action could release them.
@@ -377,11 +367,8 @@ object Bench {
     val probes = windowProbes.result() // fenceposts: windows + 1
     val engine = windowEngine.result()
     val probeEnd = probes.last
-    // reference = fastest probe this sweep (relative detection); an env
-    // override can tighten it when the whole sweep ran on slow cycles
-    val ref = (probes :+ probeStart)
-      .appendedAll(sys.env.get("SPARK_GRAFT_PROBE_REF_MS").map(_.toDouble))
-      .min
+    // reference = fastest probe this sweep (relative detection)
+    val ref = (probes :+ probeStart).min
     // engine reference = SECOND-smallest probe (min of the rest): the
     // engine probe is noisy enough that one anomalously fast sample
     // otherwise flags the whole sweep (observed: ref 169 ms against a
@@ -411,9 +398,8 @@ object Bench {
     // collectively), ordered worst-ratio-first, then the window queries.
     // (history is recorded at the default bench SF; at any other SF the
     // ratios would be scale effects, not contention — rule disabled)
-    val history =
-      if (sfDir.replaceAll("/+$", "").endsWith("sf0.1")) loadHistory()
-      else Map.empty[String, Double]
+    val defaultSf = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+    val history = if (defaultSf) loadHistory() else Map.empty[String, Double]
     val rawByName = raw.toMap
     val outliers = historyOutliers(raw, history)
       .sortBy(n => -(rawByName(n).wall / history(n)))
@@ -444,53 +430,26 @@ object Bench {
     // `rerun` records every query the pass re-timed (the audit trail —
     // a rerun that merely CONFIRMS the original wall is still evidence
     // the correction ran); the improved ones additionally carry
-    // wall_raw in the detailed record
+    // wall_raw in the record
     val probeInfo = ProbeInfo(windowSize, probes, ref, degraded,
       affected.sorted, rerunProbe, raw.map(_._2.wall).sum,
       engine, engineRef, outliers.sorted,
       regressionsVsHistory(results, history))
-    // stdout keeps the driver-contract shape (wall seconds only) plus
-    // the run-quality self-label; the detailed {wall, cpu, gc} record
-    // goes to the persisted files.
-    val walls = results.map { case (n, s) => n -> s.wall }
-    val contended = Some(isContended(results, degraded))
     val errs = queryErrors.toSeq
-    println(renderJson(walls, sfDir, Some(env), contended, Some(probeInfo),
-      errors = errs))
-    // The driver stores only the LAST 2000 chars of stdout and tries to
-    // parse a JSON line out of that window; the full-inventory line is
-    // ~7k chars, so its head is always cut off and the parse fails
-    // (BENCH_r07/r08 both recorded "parsed": null). Print a compact
-    // twin — slowest queries only, same summary fields, probe ARRAYS
-    // elided — sized to survive the window intact. Totals are
-    // identical; the full map lives in the long line above and in
-    // BENCH_LOCAL.json.
-    println(renderCompactJson(walls, sfDir, Some(env), contended,
-      probes = Some(probeInfo), errors = errs))
-    // All 15 rounds recorded "parsed": null even when the compact line
-    // sat intact in the captured tail — because sbt's logger prefixed
-    // it with "[info] " and appended a "[success]" banner (both fixed
-    // in build.sbt: StdoutOutput + showSuccess=false). Belt-and-braces:
-    // the VERY LAST line of program output is a minimal twin — same
-    // value/value_raw/sf, a 5-query map, ~350 chars — so a parser that
-    // only reads the final line, or keeps a far smaller tail window,
-    // still gets the totals. BenchFormatSpec pins its length.
-    println(renderMinimalJson(walls, sfDir, Some(probeInfo.valueRaw),
-      errorsN = errs.size))
-    // The driver's stdout tail has truncated the head of this line in
-    // past rounds; persist the full line so totals are always readable.
-    val detailed = renderDetailedJson(results, sfDir, Some(env),
-      Some(probeInfo), rawWalls, errors = errs)
+    // One stdout line for the driver, whose capture keeps only the last
+    // 2,000 chars of stdout (a ~9k-char full-inventory line once lost
+    // its head to it); everything else goes to the persisted record.
+    println(line(results, sfDir, probeInfo, errs.size))
+    val rec = record(results, sfDir, env, probeInfo, rawWalls, errs)
     // BENCH_LOCAL.json is the committed record of a FULL sweep at the
     // default SF — a SPARK_GRAFT_ONLY partial run or an off-SF sweep
     // must not clobber it (each has happened once);
     // /tmp/bench_last.json always gets the current run for inspection.
-    val official = only.isEmpty &&
-      sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+    val official = only.isEmpty && defaultSf
     val sinks = if (official) Seq("/tmp/bench_last.json", "BENCH_LOCAL.json")
                 else Seq("/tmp/bench_last.json")
     for (p <- sinks) {
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), detailed + "\n")
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), rec + "\n")
       catch { case _: Throwable => }
     }
     // Min-merge this sweep's corrected walls into the committed history
@@ -498,9 +457,9 @@ object Bench {
     // SF would pollute the per-query baseline). A min can only tighten:
     // contention inflates walls, it never deflates them, so the running
     // min converges on each query's honest cost on this box.
-    if (only.isEmpty && results.size == SparkEntry.queries.size &&
-        sfDir.replaceAll("/+$", "").endsWith("sf0.1")) {
-      val merged = mergeHistory(history, walls, queryErrors.keySet.toSet)
+    if (official && results.size == SparkEntry.queries.size) {
+      val merged = mergeHistory(history, results.map { case (n, s) => n -> s.wall },
+          queryErrors.keySet.toSet)
         .toSeq.sorted.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
       try java.nio.file.Files.writeString(
@@ -512,176 +471,70 @@ object Bench {
     if (errs.nonEmpty) sys.exit(1)
   }
 
-  /** One-line result JSON. 3-decimal seconds keep the line compact,
-    * and the summary fields (metric/value/unit/sf) come AFTER the
-    * per-query map: the driver's capture keeps the TAIL of stdout, so
-    * when the head of a long line is truncated (observed in rounds 1
-    * and 3) the headline total still survives in the captured suffix —
-    * and the full line is always in BENCH_LOCAL.json /
-    * /tmp/bench_last.json anyway. Key order is irrelevant to any JSON
-    * parser. BenchFormatSpec guards format and length. */
-  def renderJson(results: Seq[(String, Double)], sfDir: String,
-                 env: Option[Env] = None,
-                 contended: Option[Boolean] = None,
-                 probes: Option[ProbeInfo] = None,
-                 errors: Seq[(String, String)] = Seq.empty): String =
-    s"""{"queries":${queriesMap(results)},""" +
-      summaryTail(results, sfDir, env, contended, probes, errors = errors)
+  /** Queries named on the stdout line: the slowest ones, enough to
+    * compare rounds while the line stays under 1,200 chars at full
+    * inventory. */
+  private val lineQueries = 20
 
-  /** The per-query map and the summary tail are shared by BOTH
-    * renderers — the compact line's "totals are identical" promise is
-    * structural, not copy-discipline. (Sum of an empty Seq[Double] is
-    * 0.0, so no empty-case branch is needed.) */
-  private def queriesMap(results: Seq[(String, Double)]): String =
-    results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-
-  private def summaryTail(results: Seq[(String, Double)], sfDir: String,
-                          env: Option[Env], contended: Option[Boolean],
-                          probes: Option[ProbeInfo] = None,
-                          withNames: Boolean = true,
-                          errors: Seq[(String, String)] = Seq.empty): String = {
-    val total = results.map(_._2).sum
-    // value_raw/value_corrected make the self-correction explicit:
-    // "value" (the driver's gate input) IS the corrected total; the
-    // pre-rerun sum stays beside it so nothing is hidden.
-    val corr = probes.fold("")(p =>
-      s""""value_raw":${f3(p.valueRaw)},"value_corrected":${f3(total)},""")
-    s"""${envFields(env, contended)}${probeFields(probes, withNames)}$corr""" +
-      s"""${errorFields(errors, withNames)}""" +
-      s""""metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir"}"""
+  /** The stdout line, the one the driver parses: the slowest queries'
+    * walls plus the run-quality counts, with metric/value/unit/sf LAST
+    * so a capture that keeps only the tail of stdout still holds the
+    * headline. `value` is the corrected total over ALL queries; the
+    * full per-query record is [[record]]. BenchFormatSpec pins the
+    * shape and the length. */
+  def line(results: Seq[(String, Sample)], sfDir: String,
+           probes: ProbeInfo, errorsN: Int): String = {
+    val shown = results.sortBy(-_._2.wall).take(lineQueries).sortBy(_._1)
+      .map { case (k, s) => "\"" + k + "\":" + f3(s.wall) }.mkString("{", ",", "}")
+    s"""{"queries":$shown,"queries_total_n":${results.size},"errors_n":$errorsN,""" +
+      s""""value_raw":${f3(probes.valueRaw)},""" +
+      s""""contended":${isContended(results, probes.degraded)},""" +
+      s""""rerun_n":${probes.rerun.size},${headline(results, sfDir)}"""
   }
 
-  /** A query that threw during timing is reported, not hidden: its wall
-    * is near-zero, so an unreported error would FLATTER the total.
-    * `errors_n` rides every line; the {name: exceptionClass} map rides
-    * the unbounded lines in full and is capped on the compact line
-    * (tail-window budget). */
-  private def errorFields(errors: Seq[(String, String)],
-                          withNames: Boolean): String = {
-    val shown = if (withNames) errors else errors.take(12)
-    val m = shown.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    s""""errors_n":${errors.size},"errors":$m,"""
-  }
-
-  /** Per-window probe evidence, emitted on all renderers. The rerun
-    * query NAMES only go on the unbounded lines — the compact trailer
-    * (2000-char tail budget) carries the count. */
-  private def probeFields(probes: Option[ProbeInfo],
-                          withNames: Boolean = true,
-                          withArrays: Boolean = true): String =
-    probes.fold("") { p =>
-      val dg = p.degraded.mkString("[", ",", "]")
-      val rr =
-        if (withNames)
-          s""""rerun":${p.rerun.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""outlier_rerun":${p.outlierRerun.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-            s""""regressions":${p.regressions.map("\"" + _ + "\"").mkString("[", ",", "]")},"""
-        else ""
-      // the per-window probe ARRAYS (~600 chars at full inventory) ride
-      // only the unbounded lines; the compact line keeps the scalars
-      val pa =
-        if (withArrays)
-          s""""probes_ms":${p.probesMs.map(f3).mkString("[", ",", "]")},"""
-        else ""
-      val ep =
-        if (p.engineProbesMs.nonEmpty) {
-          val arr =
-            if (withArrays)
-              s""""engine_probes_ms":${p.engineProbesMs.map(f3).mkString("[", ",", "]")},"""
-            else ""
-          arr + s""""engine_ref_ms":${f3(p.engineRefMs)},"""
-        } else ""
-      s""""probe_window":${p.windowSize},$pa""" +
-        s""""probe_ref_ms":${f3(p.refMs)},$ep"degraded_windows":$dg,""" +
-        s""""rerun_probe_ms":${f3(p.rerunProbeMs)},""" +
-        s""""rerun_n":${p.rerun.size},"outlier_n":${p.outlierRerun.size},""" +
-        s""""regressions_n":${p.regressions.size},$rr"""
-    }
-
-  /** The tail-window-safe twin of [[renderJson]]: only the `maxShown`
-    * slowest queries appear in the map (the interesting ones — the
-    * fast tail is uniform noise), plus `queries_shown`/`queries_total_n`
-    * so a reader knows the map is partial and where the full record is.
-    * Budget: 25 queries × ~30 chars + ~250 chars of fields ≈ 1k,
-    * comfortably inside the driver's 2000-char stdout-tail capture even
-    * with sbt's closing "[success]" line after it. Summary fields keep
-    * the same tail position as the full line. */
-  def renderCompactJson(results: Seq[(String, Double)], sfDir: String,
-                        env: Option[Env] = None,
-                        contended: Option[Boolean] = None,
-                        maxShown: Int = 25,
-                        probes: Option[ProbeInfo] = None,
-                        errors: Seq[(String, String)] = Seq.empty): String = {
-    val shown = results.sortBy(-_._2).take(maxShown).sortBy(_._1)
-    val total = results.map(_._2).sum
-    val corr = probes.fold("")(p =>
-      s""""value_raw":${f3(p.valueRaw)},"value_corrected":${f3(total)},""")
-    s"""{"queries":${queriesMap(shown)},"queries_shown":${shown.size},""" +
-      s""""queries_total_n":${results.size},"full":"BENCH_LOCAL.json",""" +
-      s"""${envFields(env, contended)}""" +
-      s"""${probeFields(probes, withNames = false, withArrays = false)}$corr""" +
-      s"""${errorFields(errors, withNames = false)}""" +
-      s""""metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir"}"""
-  }
-
-  /** The guaranteed-parse last line: same headline totals as the other
-    * renderers (shared f3 / sum), a 5-query map so the driver-contract
-    * `queries` field is present, and nothing else — ~350 chars at full
-    * inventory, safe even if the capture window is far smaller than the
-    * assumed 2000 chars or the parser reads only the final line. */
-  def renderMinimalJson(results: Seq[(String, Double)], sfDir: String,
-                        valueRaw: Option[Double] = None,
-                        errorsN: Int = 0, maxShown: Int = 5): String = {
-    val shown = results.sortBy(-_._2).take(maxShown).sortBy(_._1)
-    val total = results.map(_._2).sum
-    val raw = valueRaw.fold("")(v => s""""value_raw":${f3(v)},""")
-    s"""{"queries":${queriesMap(shown)},"queries_total_n":${results.size},""" +
-      s""""errors_n":$errorsN,$raw"metric":"total","value":${f3(total)},""" +
-      s""""unit":"sec","sf":"$sfDir"}"""
-  }
-
-  /** Run-quality fields, placed BEFORE the summary tail so the
-    * metric/value pair stays last (tail-capture property). */
-  private def envFields(env: Option[Env], contended: Option[Boolean]): String = {
-    val e = env.fold("")(e =>
-      s""""load_start":${f3(e.loadStart)},"load_end":${f3(e.loadEnd)},""" +
-        s""""nproc":${e.nproc},"cpu_probe_start_ms":${f3(e.probeStartMs)},""" +
-        s""""cpu_probe_end_ms":${f3(e.probeEndMs)},""")
-    val c = contended.fold("")(c => s""""contended":$c,""")
-    e + c
-  }
-
-  /** The persisted-file twin of [[renderJson]]: same summary fields and
-    * tail position, but each query carries {wall, cpu, gc} so a
-    * contended sweep is self-diagnosing (wall ≫ cpu + gc = the process
-    * was descheduled, not working). */
-  def renderDetailedJson(results: Seq[(String, Sample)], sfDir: String,
-                         env: Option[Env] = None,
-                         probes: Option[ProbeInfo] = None,
-                         rawWalls: Map[String, Double] = Map.empty,
-                         errors: Seq[(String, String)] = Seq.empty): String = {
+  /** The persisted record (/tmp/bench_last.json, and BENCH_LOCAL.json on
+    * an official sweep): each query carries {wall, cpu, gc} — plus
+    * wall_raw where the rerun pass exonerated it — so a contended sweep
+    * is self-diagnosing (wall ≫ cpu + gc = the process was descheduled,
+    * not working), beside the host record, the per-window probe
+    * evidence, the rerun/outlier/regression names and the errors map.
+    * `value_raw`/`value_corrected` make the self-correction explicit:
+    * `value` IS the corrected total. Same headline as [[line]]. */
+  def record(results: Seq[(String, Sample)], sfDir: String, env: Env,
+             probes: ProbeInfo, rawWalls: Map[String, Double],
+             errors: Seq[(String, String)]): String = {
+    def names(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def arr(vs: Seq[Double]): String = vs.map(f3).mkString("[", ",", "]")
     val qs = results.map { case (k, s) =>
-      // queries the rerun pass exonerated carry their degraded-window
-      // raw wall beside the corrected one
       val raw = rawWalls.get(k).fold("")(w => s""","wall_raw":${f3(w)}""")
       s"""\"$k\":{"wall":${f3(s.wall)},"cpu":${f3(s.cpu)},"gc":${f3(s.gc)}$raw}"""
     }.mkString("{", ",", "}")
-    val tw = results.map(_._2.wall).sum
-    val tc = results.map(_._2.cpu).sum
-    val tg = results.map(_._2.gc).sum
-    val cq = contendedQueries(results)
-    val cqs = cq.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contended = isContended(results, probes.fold(Seq.empty[Int])(_.degraded))
-    val corr = probes.fold("")(p =>
-      s""""value_raw":${f3(p.valueRaw)},"value_corrected":${f3(tw)},""")
-    s"""{"queries":$qs,"cpu_total":${f3(tc)},"gc_total":${f3(tg)},""" +
-      s""""contended_queries":$cqs,${envFields(env, Some(contended))}""" +
-      s"""${probeFields(probes)}$corr""" +
-      s"""${errorFields(errors, withNames = true)}""" +
-      s""""metric":"total","value":${f3(tw)},"unit":"sec","sf":"$sfDir"}"""
+    val engine =
+      if (probes.engineProbesMs.nonEmpty)
+        s""""engine_probes_ms":${arr(probes.engineProbesMs)},"engine_ref_ms":${f3(probes.engineRefMs)},"""
+      else ""
+    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
+    s"""{"queries":$qs,"cpu_total":${f3(results.map(_._2.cpu).sum)},""" +
+      s""""gc_total":${f3(results.map(_._2.gc).sum)},""" +
+      s""""contended_queries":${names(contendedQueries(results))},""" +
+      s""""load_start":${f3(env.loadStart)},"load_end":${f3(env.loadEnd)},""" +
+      s""""nproc":${env.nproc},"cpu_probe_start_ms":${f3(env.probeStartMs)},""" +
+      s""""cpu_probe_end_ms":${f3(env.probeEndMs)},""" +
+      s""""contended":${isContended(results, probes.degraded)},""" +
+      s""""probe_window":${probes.windowSize},"probes_ms":${arr(probes.probesMs)},""" +
+      s""""probe_ref_ms":${f3(probes.refMs)},$engine""" +
+      s""""degraded_windows":${probes.degraded.mkString("[", ",", "]")},""" +
+      s""""rerun_probe_ms":${f3(probes.rerunProbeMs)},""" +
+      s""""rerun_n":${probes.rerun.size},"outlier_n":${probes.outlierRerun.size},""" +
+      s""""regressions_n":${probes.regressions.size},"rerun":${names(probes.rerun)},""" +
+      s""""outlier_rerun":${names(probes.outlierRerun)},"regressions":${names(probes.regressions)},""" +
+      s""""value_raw":${f3(probes.valueRaw)},"value_corrected":${f3(results.map(_._2.wall).sum)},""" +
+      s""""errors_n":${errors.size},"errors":$errs,${headline(results, sfDir)}"""
   }
+
+  private def headline(results: Seq[(String, Sample)], sfDir: String): String =
+    s""""metric":"total","value":${f3(results.map(_._2.wall).sum)},"unit":"sec","sf":"$sfDir"}"""
 
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

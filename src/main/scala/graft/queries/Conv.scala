@@ -47,11 +47,4 @@ object Conv {
       s"CAST((2 * CAST(sum(CAST($colName AS DECIMAL(18,2))) * $p AS BIGINT) " +
       s"+ count(1)) div (2 * count(1)) AS DOUBLE) / $p.0")
   }
-
-  /** Oracle-side SQL for [[moneyAvg]]. */
-  def moneyAvgSql(colName: String, scale: Int = 2): String = {
-    val p = BigInt(10).pow(scale)
-    s"CAST((2 * CAST(sum(CAST($colName AS DECIMAL(18,2))) * $p AS BIGINT) " +
-    s"+ count(*)) // (2 * count(*)) AS DOUBLE) / $p.0"
-  }
 }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Window-function inventory (SURVEY.md §2B W1-W3, T2) plus the batch
-  * twins of the streaming operators (X1 tumbling/sliding, X3 session
-  * windows, X4 dedup) — the twins share semantics with the Structured
-  * Streaming versions in graft.streaming and give them an oracle.
+  * forms of the streaming operators (X1 tumbling/sliding, X3 session
+  * windows, X4 dedup). The tumbling and dedup ones share semantics with
+  * the Structured Streaming versions in graft.streaming and give them
+  * an oracle; sliding and session windows exist only in batch form.
   *
   * Determinism: every window ORDER BY includes a unique tiebreaker
   * key; event timestamps enter comparisons only at whole-second

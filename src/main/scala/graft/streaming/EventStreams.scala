@@ -55,24 +55,6 @@ object EventStreams {
       .select(col("win.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** X1 — sliding window variant (1 hour wide, 30-minute slide). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("win"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("win.start").as("win_start"), col("n"))
-
-  /** X3 — session windows with a 30-minute inactivity gap (built-in
-    * session_window keeps state per (user, open session) only). */
-  def sessionAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("sess"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("user_id"), col("sess.start").as("session_start"),
-        col("n_events"), col("sum_value"))
-
   /** X4 — streaming dedup on event_id; state expires with the
     * watermark instead of growing forever. */
   def dedup(events: DataFrame): DataFrame =

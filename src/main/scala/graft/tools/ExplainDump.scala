@@ -25,10 +25,10 @@ object ExplainDump {
       // queryExecution text, not df.explain (which prints to console)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      // strip JVM identity hashes that churn every run
-      val clean = txt.replaceAll("@[0-9a-f]{6,}", "")
+      // plan ids, stage paths, lambda names and identity hashes churn
+      // every run; PlanAudit's normaliser is the one rule for them
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${q}_$suffix.txt"), clean)
+        java.nio.file.Paths.get(s"$outDir/${q}_$suffix.txt"), graft.PlanAudit.normalise(txt))
       try { graft.Caches.drain(); spark.catalog.clearCache() }
       catch { case _: Throwable => }
       println(s"[explain] wrote $outDir/${q}_$suffix.txt")

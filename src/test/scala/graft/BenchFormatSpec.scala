@@ -2,62 +2,78 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench result line must stay (a) valid JSON and (b) short enough
-  * for the harness's output-tail capture — the full-precision line
+/** The bench's one stdout line must stay (a) valid JSON and (b) short
+  * enough for the driver's output-tail capture — a full-inventory line
   * exceeded that window once and the whole round's bench went
-  * unparsed. Uses Jackson (already on Spark's classpath). */
+  * unparsed. The persisted record carries everything else. Uses Jackson
+  * (already on Spark's classpath). */
 class BenchFormatSpec extends AnyFunSuite {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  private val env = Bench.Env(6.5, 8.2, 32, 445.0, 450.0)
+  private def probes(valueRaw: Double) =
+    Bench.ProbeInfo(25, Seq(450.0, 452.0), 450.0, Nil, Nil, 0.0, valueRaw)
+  private def samples(walls: Seq[(String, Double)]) =
+    walls.map { case (n, w) => n -> Bench.Sample(w, w, 0.0) }
+  private def record(results: Seq[(String, Bench.Sample)], p: Bench.ProbeInfo,
+                     e: Bench.Env = env, rawWalls: Map[String, Double] = Map.empty,
+                     errors: Seq[(String, String)] = Nil) =
+    Bench.record(results, "/d", e, p, rawWalls, errors)
+
   test("render is valid JSON with the driver's expected fields") {
-    val line = Bench.renderJson(
-      Seq("q_a" -> 1.23456789, "q_b" -> 0.000001), "/data/sf0.1")
+    val line = Bench.line(samples(Seq("q_a" -> 1.23456789, "q_b" -> 0.000001)),
+      "/data/sf0.1", probes(1.5), 0)
     val node = mapper.readTree(line)
     assert(node.get("metric").asText() == "total")
     assert(node.get("unit").asText() == "sec")
+    assert(node.get("sf").asText() == "/data/sf0.1")
     assert(math.abs(node.get("value").asDouble() - 1.235) < 1e-9)
     assert(node.get("queries").get("q_a").asDouble() == 1.235)
+    assert(node.get("value_raw").asDouble() == 1.5)
+    assert(node.get("errors_n").asInt() == 0)
     assert(!line.contains("\n"))
   }
 
   test("a full-inventory line keeps the headline total in its tail") {
-    val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    val line = Bench.renderJson(results, "/root/testdata/sf0.1")
-    assert(mapper.readTree(line).get("queries").size() == results.size)
-    // Soft budget only: the load-bearing property is the tail check
-    // below (the driver keeps the END of stdout, and the full line is
-    // always persisted to BENCH_LOCAL.json anyway). 358 queries at
-    // worst-case 3-decimal widths is ~9.1k chars; headroom for the
-    // next rounds' inventory growth.
-    assert(line.length < 13000, s"line is ${line.length} chars — capture window risk")
+    // The driver keeps the LAST 2000 chars of stdout and json-parses a
+    // line out of it (BENCH_r08.json: tail length exactly 2000,
+    // "parsed": null because a 9k-char line's head was cut). The one
+    // stdout line must fit that window with headroom for whatever
+    // follows it, and name enough queries to compare rounds. Worst
+    // case: the longest names are the slowest, every wall is 3-digit,
+    // every window degraded, 150 reruns and 20 errors.
+    val names = SparkEntry.queries.keys.toSeq.sortBy(n => (n.length, n))
+    val results = names.zipWithIndex.map { case (n, i) =>
+      n -> Bench.Sample(100.0 + i + 0.456789, 1.0, 0.0) }
+    val nw = (results.size + 24) / 25
+    val pi = Bench.ProbeInfo(25, Seq.fill(nw + 1)(1234.567), 445.0,
+      (0 until nw).toSeq, names.take(150), 1234.5,
+      results.map(_._2.wall).sum * 2,
+      engineProbesMs = Seq.fill(nw + 1)(1234.567), engineRefMs = 300.0)
+    val line = Bench.line(results, "/root/testdata/sf0.1", pi, 20)
+    assert(line.length < 1200, s"line is ${line.length} chars")
+    assert(!line.contains("\n"))
+    val node = mapper.readTree(line)
+    assert(node.get("metric").asText() == "total")
+    assert(node.get("unit").asText() == "sec")
+    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    // the 20 slowest, by name
+    val shown = node.get("queries")
+    assert(shown.size() == 20)
+    names.takeRight(20).foreach(n => assert(shown.has(n), s"$n missing"))
+    // the total covers ALL queries, not just the shown ones
+    assert(math.abs(node.get("value").asDouble() - results.map(_._2.wall).sum) < 0.5)
+    assert(node.get("queries_total_n").asInt() == results.size)
+    assert(node.get("errors_n").asInt() == 20)
+    assert(node.get("rerun_n").asInt() == 150)
+    assert(node.get("contended").asBoolean()) // degraded windows ⇒ contended
+    assert(node.get("value_raw").asDouble() > node.get("value").asDouble())
     // head truncation is the observed failure mode; the summary fields
     // must sit in the LAST 200 chars so a tail capture always has them
     val tail = line.takeRight(200)
     assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"),
       s"summary fields not in tail: ...${line.takeRight(120)}")
-  }
-
-  test("compact trailer line fits the driver's 2000-char tail window") {
-    // The driver keeps the LAST 2000 chars of stdout and json-parses a
-    // line out of it (BENCH_r08.json: tail length exactly 2000,
-    // "parsed": null because the full line's head was cut). The compact
-    // line is the one guaranteed-parseable record; it must fit the
-    // window with ~200 chars of headroom for sbt's closing lines.
-    val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    val env = Bench.Env(6.5, 8.2, 32, 70.5, 72.25)
-    val line = Bench.renderCompactJson(results, "/root/testdata/sf0.1",
-      Some(env), Some(false))
-    assert(line.length < 1800, s"compact line is ${line.length} chars")
-    val node = mapper.readTree(line)
-    assert(node.get("metric").asText() == "total")
-    assert(node.get("unit").asText() == "sec")
-    // total covers ALL queries, not just the shown subset
-    assert(math.abs(node.get("value").asDouble() - 123.457 * results.size) < 0.5)
-    assert(node.get("queries").size() == math.min(25, results.size))
-    assert(node.get("queries_total_n").asInt() == results.size)
-    assert(node.get("queries_shown").asInt() == math.min(25, results.size))
-    assert(!line.contains("\n"))
   }
 
   test("regression self-report: >50% and >0.3s over history, floor skips jitter") {
@@ -71,25 +87,15 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.regressionsVsHistory(res, hist) == Seq("q_a"))
     val p = Bench.ProbeInfo(25, Seq(1.0, 1.0), 1.0, Nil, Nil, 0.0, 5.0,
       regressions = Seq("q_a"))
-    val line = Bench.renderJson(Seq("q_a" -> 1.9), "/d", probes = Some(p))
-    val node = mapper.readTree(line)
+    val node = mapper.readTree(record(Seq("q_a" -> Bench.Sample(1.9, 1.8, 0.0)), p))
     assert(node.get("regressions_n").asInt() == 1)
     assert(node.get("regressions").get(0).asText() == "q_a")
   }
 
-  test("compact trailer keeps the slowest queries") {
-    val results = Seq("q_fast" -> 0.1, "q_slow" -> 9.0, "q_mid" -> 1.0)
-    val line = Bench.renderCompactJson(results, "/d", maxShown = 2)
-    val node = mapper.readTree(line)
-    assert(node.get("queries").has("q_slow") && node.get("queries").has("q_mid"))
-    assert(!node.get("queries").has("q_fast"))
-    assert(math.abs(node.get("value").asDouble() - 10.1) < 1e-9)
-  }
-
   test("detailed render carries {wall, cpu, gc} per query plus the summary tail") {
-    val line = Bench.renderDetailedJson(
+    val line = record(
       Seq("q_a" -> Bench.Sample(2.0, 1.5, 0.25), "q_b" -> Bench.Sample(1.0, 0.5, 0.0)),
-      "/data/sf0.1")
+      probes(3.0))
     val node = mapper.readTree(line)
     assert(node.get("queries").get("q_a").get("wall").asDouble() == 2.0)
     assert(node.get("queries").get("q_a").get("cpu").asDouble() == 1.5)
@@ -100,6 +106,14 @@ class BenchFormatSpec extends AnyFunSuite {
     val tail = line.takeRight(200)
     assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"))
     assert(!line.contains("\n"))
+    // at full inventory the record holds every query, and the stdout
+    // line's headline is the record's
+    val all = SparkEntry.queries.keys.toSeq.sorted.map(_ -> Bench.Sample(123.456789, 1.0, 0.0))
+    val full = record(all, probes(1.0))
+    assert(mapper.readTree(full).get("queries").size() == all.size)
+    assert(full.takeRight(200).contains("\"metric\":\"total\""))
+    assert(mapper.readTree(full).get("value").asDouble() ==
+      mapper.readTree(Bench.line(all, "/d", probes(1.0), 0)).get("value").asDouble())
   }
 
   test("run-quality self-label: load averages and the contended flag") {
@@ -111,20 +125,21 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.contendedQueries(good).isEmpty)
     assert(!Bench.isContended(good ++ bad.take(2)))
     assert(Bench.isContended(good ++ bad))
-    val line = Bench.renderJson((good ++ bad).map { case (n, s) => n -> s.wall },
-      "/d", Some(env), Some(Bench.isContended(good ++ bad)))
-    val node = mapper.readTree(line)
-    assert(node.get("contended").asBoolean())
-    assert(node.get("load_start").asDouble() == 3.5)
-    assert(node.get("load_end").asDouble() == 40.25)
-    assert(node.get("nproc").asInt() == 32)
-    // summary fields still close the line (tail-capture property)
-    val tail = line.takeRight(200)
-    assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"))
-    val det = Bench.renderDetailedJson(good ++ bad, "/d", Some(env))
+    val det = record(good ++ bad, probes(17.1), env)
     val dn = mapper.readTree(det)
     assert(dn.get("contended").asBoolean())
+    assert(dn.get("load_start").asDouble() == 3.5)
+    assert(dn.get("load_end").asDouble() == 40.25)
+    assert(dn.get("nproc").asInt() == 32)
     assert(dn.get("contended_queries").size() == 3)
+    // summary fields still close the record (tail-capture property)
+    val tail = det.takeRight(200)
+    assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"))
+    // the stdout line carries the same label
+    assert(mapper.readTree(Bench.line(good ++ bad, "/d", probes(17.1), 0))
+      .get("contended").asBoolean())
+    assert(!mapper.readTree(Bench.line(good, "/d", probes(2.1), 0))
+      .get("contended").asBoolean())
   }
 
   test("degraded-window detection: bordering CPU probe >1.35× OR engine >1.6×") {
@@ -153,40 +168,34 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.isContended(calm, Seq(2)))
   }
 
-  test("probe/self-correction fields ride all three renderers") {
+  test("probe/self-correction fields ride the line and the record") {
     val pi = Bench.ProbeInfo(windowSize = 25,
       probesMs = Seq(450.0, 1200.0), refMs = 450.0, degraded = Seq(1),
       rerun = Seq("q_x", "q_y"), rerunProbeMs = 455.0, valueRaw = 30.0)
-    val walls = Seq("q_x" -> 2.0, "q_y" -> 3.0)
+    val results = Seq("q_x" -> Bench.Sample(2.0, 1.8, 0.1), "q_y" -> Bench.Sample(3.0, 2.7, 0.1))
     val env = Bench.Env(1.0, 1.5, 32, 450.0, 452.0)
-    val full = mapper.readTree(
-      Bench.renderJson(walls, "/d", Some(env), Some(true), Some(pi)))
-    assert(full.get("probes_ms").size() == 2)
-    assert(full.get("degraded_windows").get(0).asInt() == 1)
-    assert(full.get("rerun").size() == 2 && full.get("rerun_n").asInt() == 2)
-    assert(full.get("value_raw").asDouble() == 30.0)
-    assert(full.get("value_corrected").asDouble() == 5.0)
-    assert(full.get("value").asDouble() == 5.0) // gate input = corrected
-    val compact = mapper.readTree(Bench.renderCompactJson(
-      walls, "/d", Some(env), Some(true), probes = Some(pi)))
-    assert(compact.get("rerun_n").asInt() == 2)
-    assert(compact.get("rerun") == null) // names only on unbounded lines
-    assert(compact.get("value_raw").asDouble() == 30.0)
-    val det = mapper.readTree(Bench.renderDetailedJson(
-      Seq("q_x" -> Bench.Sample(2.0, 1.8, 0.1), "q_y" -> Bench.Sample(3.0, 2.7, 0.1)),
-      "/d", Some(env), Some(pi), rawWalls = Map("q_x" -> 9.5)))
+    val det = mapper.readTree(record(results, pi, env, rawWalls = Map("q_x" -> 9.5)))
+    assert(det.get("probes_ms").size() == 2)
+    assert(det.get("degraded_windows").get(0).asInt() == 1)
+    assert(det.get("rerun").size() == 2 && det.get("rerun_n").asInt() == 2)
+    assert(det.get("value_raw").asDouble() == 30.0)
+    assert(det.get("value_corrected").asDouble() == 5.0)
+    assert(det.get("value").asDouble() == 5.0) // gate input = corrected
     assert(det.get("queries").get("q_x").get("wall_raw").asDouble() == 9.5)
     assert(det.get("queries").get("q_y").get("wall_raw") == null)
     assert(det.get("contended").asBoolean()) // degraded window ⇒ contended
-    // summary fields still close every line (tail-capture property)
-    for (line <- Seq(
-        Bench.renderJson(walls, "/d", Some(env), Some(true), Some(pi)),
-        Bench.renderCompactJson(walls, "/d", Some(env), Some(true), probes = Some(pi)),
-        Bench.renderDetailedJson(Seq("q_x" -> Bench.Sample(2.0, 1.8, 0.1)),
-          "/d", Some(env), Some(pi)))) {
-      val tail = line.takeRight(200)
+    val line = mapper.readTree(Bench.line(results, "/d", pi, 0))
+    assert(line.get("rerun_n").asInt() == 2)
+    assert(line.get("value_raw").asDouble() == 30.0)
+    assert(line.get("value").asDouble() == 5.0)
+    assert(line.get("contended").asBoolean())
+    // the per-window arrays and the names are the record's alone
+    assert(line.get("probes_ms") == null && line.get("rerun") == null)
+    // summary fields still close both (tail-capture property)
+    for (json <- Seq(Bench.line(results, "/d", pi, 0), record(results.take(1), pi, env))) {
+      val tail = json.takeRight(200)
       assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"))
-      assert(!line.contains("\n"))
+      assert(!json.contains("\n"))
     }
   }
 
@@ -203,101 +212,42 @@ class BenchFormatSpec extends AnyFunSuite {
       Seq("q_ok" -> Bench.Sample(2.5, 2.0, 0.0)), hist).isEmpty)
     // empty history (non-default SF, missing file) disables the rule
     assert(Bench.historyOutliers(raw, Map.empty).isEmpty)
-    // the outlier names ride the unbounded renderers next to `rerun`
+    // the outlier names ride the record next to `rerun`
     val pi = Bench.ProbeInfo(25, Seq(450.0, 452.0), 450.0, Seq.empty,
       rerun = Seq("q_slow"), rerunProbeMs = 451.0, valueRaw = 12.0,
       outlierRerun = Seq("q_slow"))
-    val full = mapper.readTree(Bench.renderJson(
-      Seq("q_slow" -> 2.1), "/d", None, Some(false), Some(pi)))
-    assert(full.get("outlier_rerun").get(0).asText() == "q_slow")
-    assert(full.get("outlier_n").asInt() == 1)
-    val compact = mapper.readTree(Bench.renderCompactJson(
-      Seq("q_slow" -> 2.1), "/d", None, Some(false), probes = Some(pi)))
-    assert(compact.get("outlier_rerun") == null) // names only unbounded
-    assert(compact.get("outlier_n").asInt() == 1)
-  }
-
-  test("compact trailer with full probe evidence still fits the tail window") {
-    val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    // worst realistic shape: every window probed, several degraded
-    val nw = (results.size + 24) / 25
-    val pi = Bench.ProbeInfo(25, Seq.fill(nw)(1234.567), 445.0,
-      (0 until nw).toSeq, results.take(150).map(_._1), 1234.5,
-      results.size * 123.456789 * 2,
-      engineProbesMs = Seq.fill(nw)(1234.567), engineRefMs = 300.0)
-    val line = Bench.renderCompactJson(results, "/root/testdata/sf0.1",
-      Some(Bench.Env(6.5, 8.2, 32, 445.0, 450.0)), Some(true), probes = Some(pi))
-    assert(line.length < 1800, s"compact line is ${line.length} chars")
-    assert(mapper.readTree(line).get("value") != null)
-  }
-
-  test("minimal last line: tiny, valid, and carries the driver's fields") {
-    // This is the VERY LAST line the bench prints: it must parse even
-    // under a far smaller tail window than the assumed 2000 chars, and
-    // even if the driver's parser reads only the final stdout line.
-    val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    val line = Bench.renderMinimalJson(results, "/root/testdata/sf0.1",
-      valueRaw = Some(results.size * 123.456789 * 2), errorsN = 0)
-    assert(line.length < 600, s"minimal line is ${line.length} chars")
-    assert(!line.contains("\n"))
-    val node = mapper.readTree(line)
-    assert(node.get("metric").asText() == "total")
-    assert(node.get("unit").asText() == "sec")
-    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
-    assert(node.get("queries_total_n").asInt() == results.size)
-    assert(node.get("queries").size() == 5) // contract field present
-    assert(node.get("value_raw") != null && node.get("errors_n").asInt() == 0)
-    assert(math.abs(node.get("value").asDouble() - 123.457 * results.size) < 0.5)
+    val det = mapper.readTree(record(Seq("q_slow" -> Bench.Sample(2.1, 2.0, 0.0)), pi))
+    assert(det.get("outlier_rerun").get(0).asText() == "q_slow")
+    assert(det.get("outlier_n").asInt() == 1)
   }
 
   test("a throwing query is reported in errors/errors_n on every line") {
     // timeOne records the exception class of a query that throws; the
-    // renderers must surface it so a fast-because-broken wall can never
-    // read as a win. Names ride unbounded lines in full; the compact
-    // line carries the count plus a capped map.
+    // line and the record must surface it so a fast-because-broken wall
+    // can never read as a win. The record names every one; the stdout
+    // line carries the count.
     val errs = Seq("q_bad" -> "SparkException", "q_worse" -> "IOException")
-    val full = mapper.readTree(Bench.renderJson(
-      Seq("q_bad" -> 0.001, "q_ok" -> 1.0), "/d", errors = errs))
-    assert(full.get("errors_n").asInt() == 2)
-    assert(full.get("errors").get("q_bad").asText() == "SparkException")
-    assert(full.get("errors").get("q_worse").asText() == "IOException")
-    val compact = mapper.readTree(Bench.renderCompactJson(
-      Seq("q_bad" -> 0.001), "/d",
-      errors = (1 to 20).map(i => s"q_e$i" -> "E")))
-    assert(compact.get("errors_n").asInt() == 20)
-    assert(compact.get("errors").size() == 12) // capped for the tail window
-    val det = mapper.readTree(Bench.renderDetailedJson(
-      Seq("q_bad" -> Bench.Sample(0.001, 0.0, 0.0)), "/d", errors = errs))
+    val results = Seq("q_bad" -> Bench.Sample(0.001, 0.0, 0.0), "q_ok" -> Bench.Sample(1.0, 1.0, 0.0))
+    val det = mapper.readTree(record(results, probes(1.0), errors = errs))
     assert(det.get("errors_n").asInt() == 2)
+    assert(det.get("errors").get("q_bad").asText() == "SparkException")
+    assert(det.get("errors").get("q_worse").asText() == "IOException")
+    val line = mapper.readTree(Bench.line(results, "/d", probes(1.0), errs.size))
+    assert(line.get("errors_n").asInt() == 2)
     // a clean sweep still carries the count (0), so absence of errors
     // is explicit, not ambiguous
-    val clean = mapper.readTree(Bench.renderJson(Seq("q_ok" -> 1.0), "/d"))
+    val clean = mapper.readTree(record(results.drop(1), probes(1.0)))
     assert(clean.get("errors_n").asInt() == 0)
-  }
-
-  test("compact trailer elides the per-window probe arrays") {
-    val results = SparkEntry.queries.keys.toSeq.sorted.map(_ -> 123.456789)
-    val nw = (results.size + 24) / 25
-    val pi = Bench.ProbeInfo(25, Seq.fill(nw + 1)(1234.567), 445.0,
-      (0 until nw).toSeq, results.take(150).map(_._1), 1234.5,
-      results.size * 123.456789 * 2,
-      engineProbesMs = Seq.fill(nw + 1)(1234.567), engineRefMs = 300.0)
-    val line = Bench.renderCompactJson(results, "/root/testdata/sf0.1",
-      Some(Bench.Env(6.5, 8.2, 32, 445.0, 450.0)), Some(true), probes = Some(pi))
-    val node = mapper.readTree(line)
-    assert(node.get("probes_ms") == null && node.get("engine_probes_ms") == null)
-    // the scalar probe evidence stays
-    assert(node.get("probe_ref_ms") != null && node.get("rerun_n") != null)
-    assert(node.get("degraded_windows").size() == nw)
-    assert(line.length < 1400, s"compact line is ${line.length} chars")
+    assert(clean.get("errors").size() == 0)
   }
 
   test("locale independence: decimal point, not comma") {
     val prev = java.util.Locale.getDefault
     try {
       java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      val line = Bench.renderJson(Seq("q" -> 1.5), "/d")
-      assert(line.contains("1.500") && !line.contains("1,500"))
+      for (json <- Seq(Bench.line(samples(Seq("q" -> 1.5)), "/d", probes(2.5), 0),
+                       record(samples(Seq("q" -> 1.5)), probes(2.5))))
+        assert(json.contains("1.500") && json.contains("2.500") && !json.contains("1,500"))
     } finally java.util.Locale.setDefault(prev)
   }
 
