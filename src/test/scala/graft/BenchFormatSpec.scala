@@ -93,19 +93,19 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("detailed render carries {wall, cpu, gc} per query plus the summary tail") {
-    val line = record(
+    val rec = record(
       Seq("q_a" -> Bench.Sample(2.0, 1.5, 0.25), "q_b" -> Bench.Sample(1.0, 0.5, 0.0)),
       probes(3.0))
-    val node = mapper.readTree(line)
+    val node = mapper.readTree(rec)
     assert(node.get("queries").get("q_a").get("wall").asDouble() == 2.0)
     assert(node.get("queries").get("q_a").get("cpu").asDouble() == 1.5)
     assert(node.get("queries").get("q_a").get("gc").asDouble() == 0.25)
     assert(node.get("value").asDouble() == 3.0)
     assert(node.get("cpu_total").asDouble() == 2.0)
     // same tail property as the stdout line: summary fields last
-    val tail = line.takeRight(200)
+    val tail = rec.takeRight(200)
     assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"))
-    assert(!line.contains("\n"))
+    assert(!rec.contains("\n"))
     // at full inventory the record holds every query, and the stdout
     // line's headline is the record's
     val all = SparkEntry.queries.keys.toSeq.sorted.map(_ -> Bench.Sample(123.456789, 1.0, 0.0))
