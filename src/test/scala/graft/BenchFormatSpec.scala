@@ -21,6 +21,25 @@ class BenchFormatSpec extends AnyFunSuite {
                      errors: Seq[(String, String)] = Nil) =
     Bench.record(results, "/d", e, p, rawWalls, errors)
 
+  // The driver keeps the LAST 2000 chars of stdout and json-parses a
+  // line out of it (BENCH_r08.json: tail length exactly 2000,
+  // "parsed": null because a 9k-char line's head was cut). The one
+  // stdout line must fit that window with headroom for whatever
+  // follows it, and name enough queries to compare rounds. Worst case
+  // at full inventory: the longest names are the slowest, every wall
+  // is 3-digit, every window degraded, 150 reruns and 20 errors.
+  private lazy val fullNames = SparkEntry.queries.keys.toSeq.sortBy(n => (n.length, n))
+  private lazy val fullResults = fullNames.zipWithIndex.map { case (n, i) =>
+    n -> Bench.Sample(100.0 + i + 0.456789, 1.0, 0.0) }
+  private lazy val fullProbes = {
+    val nw = (fullResults.size + 24) / 25
+    Bench.ProbeInfo(25, Seq.fill(nw + 1)(1234.567), 445.0,
+      (0 until nw).toSeq, fullNames.take(150), 1234.5,
+      fullResults.map(_._2.wall).sum * 2,
+      engineProbesMs = Seq.fill(nw + 1)(1234.567), engineRefMs = 300.0)
+  }
+  private lazy val fullLine = Bench.line(fullResults, "/root/testdata/sf0.1", fullProbes, 20)
+
   test("render is valid JSON with the driver's expected fields") {
     val line = Bench.line(samples(Seq("q_a" -> 1.23456789, "q_b" -> 0.000001)),
       "/data/sf0.1", probes(1.5), 0)
@@ -36,44 +55,86 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("a full-inventory line keeps the headline total in its tail") {
-    // The driver keeps the LAST 2000 chars of stdout and json-parses a
-    // line out of it (BENCH_r08.json: tail length exactly 2000,
-    // "parsed": null because a 9k-char line's head was cut). The one
-    // stdout line must fit that window with headroom for whatever
-    // follows it, and name enough queries to compare rounds. Worst
-    // case: the longest names are the slowest, every wall is 3-digit,
-    // every window degraded, 150 reruns and 20 errors.
-    val names = SparkEntry.queries.keys.toSeq.sortBy(n => (n.length, n))
-    val results = names.zipWithIndex.map { case (n, i) =>
-      n -> Bench.Sample(100.0 + i + 0.456789, 1.0, 0.0) }
-    val nw = (results.size + 24) / 25
-    val pi = Bench.ProbeInfo(25, Seq.fill(nw + 1)(1234.567), 445.0,
-      (0 until nw).toSeq, names.take(150), 1234.5,
-      results.map(_._2.wall).sum * 2,
-      engineProbesMs = Seq.fill(nw + 1)(1234.567), engineRefMs = 300.0)
-    val line = Bench.line(results, "/root/testdata/sf0.1", pi, 20)
+    val node = mapper.readTree(fullLine)
+    assert(!fullLine.contains("\n"))
+    assert(node.get("metric").asText() == "total")
+    assert(node.get("unit").asText() == "sec")
+    assert(node.get("sf").asText() == "/root/testdata/sf0.1")
+    // the total covers ALL queries, not just the shown ones
+    assert(math.abs(node.get("value").asDouble() - fullResults.map(_._2.wall).sum) < 0.5)
+    assert(node.get("queries_total_n").asInt() == fullResults.size)
+    // head truncation is the observed failure mode; the summary fields
+    // must sit in the LAST 200 chars so a tail capture always has them
+    val tail = fullLine.takeRight(200)
+    assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"),
+      s"summary fields not in tail: ...${fullLine.takeRight(120)}")
+  }
+
+  test("compact trailer line fits the driver's 2000-char tail window") {
+    // The compact trailer is Bench.line, the one stdout line. A calm
+    // sweep at full inventory: no degraded window, no rerun, no error.
+    val line = Bench.line(fullResults, "/root/testdata/sf0.1", probes(1.0), 0)
+    assert(line.length < 1200, s"line is ${line.length} chars")
+    assert(!line.contains("\n"))
+    val node = mapper.readTree(line)
+    assert(node.get("metric").asText() == "total")
+    assert(node.get("unit").asText() == "sec")
+    assert(math.abs(node.get("value").asDouble() - fullResults.map(_._2.wall).sum) < 0.5)
+  }
+
+  test("compact trailer with full probe evidence still fits the tail window") {
+    assert(fullLine.length < 1200, s"line is ${fullLine.length} chars")
+    val node = mapper.readTree(fullLine)
+    assert(node.get("value") != null)
+    assert(node.get("errors_n").asInt() == 20)
+    assert(node.get("rerun_n").asInt() == 150)
+    assert(node.get("contended").asBoolean()) // degraded windows ⇒ contended
+    assert(node.get("value_raw").asDouble() > node.get("value").asDouble())
+  }
+
+  test("compact trailer keeps the slowest queries") {
+    // the 20 slowest, by name, at full inventory
+    val shown = mapper.readTree(fullLine).get("queries")
+    assert(shown.size() == 20)
+    fullNames.takeRight(20).foreach(n => assert(shown.has(n), s"$n missing"))
+    // and on a small sweep: the 5 fastest of 25 drop out of the line
+    val small = samples((0 until 25).map(i => f"q_$i%02d" -> (i + 1).toDouble))
+    val node = mapper.readTree(Bench.line(small, "/d", probes(1.0), 0))
+    (5 until 25).foreach(i => assert(node.get("queries").has(f"q_$i%02d")))
+    (0 until 5).foreach(i => assert(!node.get("queries").has(f"q_$i%02d")))
+    assert(math.abs(node.get("value").asDouble() - 325.0) < 1e-9)
+  }
+
+  test("minimal last line: tiny, valid, and carries the driver's fields") {
+    // Bench.line is the last (and only) line the bench prints: it must
+    // parse even if the driver's parser reads only the final stdout line.
+    val raw = fullResults.map(_._2.wall).sum * 2
+    val line = Bench.line(fullResults, "/root/testdata/sf0.1", probes(raw), 0)
     assert(line.length < 1200, s"line is ${line.length} chars")
     assert(!line.contains("\n"))
     val node = mapper.readTree(line)
     assert(node.get("metric").asText() == "total")
     assert(node.get("unit").asText() == "sec")
     assert(node.get("sf").asText() == "/root/testdata/sf0.1")
-    // the 20 slowest, by name
-    val shown = node.get("queries")
-    assert(shown.size() == 20)
-    names.takeRight(20).foreach(n => assert(shown.has(n), s"$n missing"))
-    // the total covers ALL queries, not just the shown ones
-    assert(math.abs(node.get("value").asDouble() - results.map(_._2.wall).sum) < 0.5)
-    assert(node.get("queries_total_n").asInt() == results.size)
-    assert(node.get("errors_n").asInt() == 20)
+    assert(node.get("queries_total_n").asInt() == fullResults.size)
+    assert(node.get("queries").size() == 20)
+    assert(math.abs(node.get("value_raw").asDouble() - raw) < 0.5)
+    assert(node.get("errors_n").asInt() == 0)
+    assert(math.abs(node.get("value").asDouble() - fullResults.map(_._2.wall).sum) < 0.5)
+  }
+
+  test("compact trailer elides the per-window probe arrays") {
+    val node = mapper.readTree(fullLine)
+    for (f <- Seq("probes_ms", "engine_probes_ms", "degraded_windows", "rerun",
+                  "outlier_rerun", "errors"))
+      assert(node.get(f) == null, s"$f on the line")
+    // the scalar count stays on the line; the arrays ride the record
     assert(node.get("rerun_n").asInt() == 150)
-    assert(node.get("contended").asBoolean()) // degraded windows ⇒ contended
-    assert(node.get("value_raw").asDouble() > node.get("value").asDouble())
-    // head truncation is the observed failure mode; the summary fields
-    // must sit in the LAST 200 chars so a tail capture always has them
-    val tail = line.takeRight(200)
-    assert(tail.contains("\"metric\":\"total\"") && tail.contains("\"value\":"),
-      s"summary fields not in tail: ...${line.takeRight(120)}")
+    val rec = mapper.readTree(record(fullResults, fullProbes))
+    assert(rec.get("probes_ms").size() == fullProbes.probesMs.size)
+    assert(rec.get("engine_probes_ms").size() == fullProbes.engineProbesMs.size)
+    assert(rec.get("degraded_windows").size() == fullProbes.degraded.size)
+    assert(rec.get("probe_ref_ms") != null)
   }
 
   test("regression self-report: >50% and >0.3s over history, floor skips jitter") {
@@ -168,7 +229,9 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.isContended(calm, Seq(2)))
   }
 
-  test("probe/self-correction fields ride the line and the record") {
+  test("probe/self-correction fields ride all three renderers") {
+    // The full, compact and detailed renderers are now the record and
+    // the stdout line; every probe field rides one or both.
     val pi = Bench.ProbeInfo(windowSize = 25,
       probesMs = Seq(450.0, 1200.0), refMs = 450.0, degraded = Seq(1),
       rerun = Seq("q_x", "q_y"), rerunProbeMs = 455.0, valueRaw = 30.0)
