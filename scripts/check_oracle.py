@@ -17,17 +17,27 @@ those. DuckDB's memory and spill are capped from the host's MemTotal,
 so an oracle too big to finish fails as one line instead of getting
 the whole check killed.
 
+An oracle that reads files a query published under
+/tmp/graft_<stage>_stage_<sf> (keyed by the SPARK_GRAFT_ORACLE_SF the
+Verify ran with) fails as one line naming that knob when <sf> is not
+the name of <sfDir>, instead of as a row mismatch against another
+fixture's files.
+
 Dev tooling only — the Scala library has no Python dependency.
 """
 import json
 import math
 import os
+import re
 import sys
 
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+STAGE = re.compile(r"/tmp/graft_[a-z]+_stage_([^/']+)/")
 
 
 def norm(v):
@@ -64,8 +74,14 @@ def main(outdir, sfdir):
     names = [n for n in sorted(oracle)
              if not only_dumped or os.path.isdir(f"{outdir}/{n}")]
     failures = []
+    sf = os.path.basename(os.path.normpath(sfdir))
     for name in names:
         sql = oracle[name]
+        staged = {m for m in STAGE.findall(sql) if m != sf}
+        if staged:
+            failures.append((name, f"oracle reads the {min(staged)} stage, check runs on {sf}"
+                                   f" — rerun Verify with SPARK_GRAFT_ORACLE_SF={sf}"))
+            continue
         try:
             want = con.sql(sql)
             want_cols = sorted(want.columns)

@@ -188,6 +188,15 @@ object Bench {
       borderBad(engineProbes, engineRefMs, engineFactor)).distinct.sorted
   }
 
+  /** The engine probes' reference: the probe at sorted index
+    * min(max(1, ⌊n/4⌋), n − 1), so a quarter of the probes (at least
+    * one) may be anomalously fast without flagging the sweep (two fast
+    * ones against a 199.7–273.5 ms band once flagged 10 of 16 windows).
+    * 0 with no probes. */
+  def engineReference(probes: Seq[Double]): Double =
+    if (probes.isEmpty) 0.0
+    else probes.sorted.apply(math.min(math.max(1, probes.size / 4), probes.size - 1))
+
   private val cpuFactor = 1.35
   private val engineFactor = 1.6
 
@@ -369,13 +378,7 @@ object Bench {
     val probeEnd = probes.last
     // reference = fastest probe this sweep (relative detection)
     val ref = (probes :+ probeStart).min
-    // engine reference = SECOND-smallest probe (min of the rest): the
-    // engine probe is noisy enough that one anomalously fast sample
-    // otherwise flags the whole sweep (observed: ref 169 ms against a
-    // 270-320 ms typical band flagged 14/15 windows)
-    val engineRef =
-      if (engine.isEmpty) 0.0
-      else engine.sorted.drop(math.min(1, engine.size - 1)).head
+    val engineRef = engineReference(engine)
     val degraded = degradedWindows(probes, ref,
       engineProbes = engine, engineRefMs = engineRef)
     // Rerun pass: every query that ran inside a degraded window gets

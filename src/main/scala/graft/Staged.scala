@@ -1,15 +1,20 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.etl.PosixLocalFileSystem
 
 /** The one process-wide memo for cross-query stages: relations several
   * registered queries derive from the same fixture dir (the price
   * census, shingle profiles and overlaps, the trade graph, the monthly
   * series, a staged JDBC table), and the scratch directories of queries
   * that round-trip data through files. Each is built once per process
-  * and served to every later caller.
+  * and served to every later caller. It also owns the three stages the
+  * DuckDB oracle reads after the JVM has exited ([[publish]]), which
+  * are rewritten on every call.
   *
   *  - Key: (stage name, `dir` made absolute and normalized), so `dir`
   *    and `dir/` are one entry. Symlinks are not resolved: a symlinked
@@ -46,7 +51,7 @@ object Staged {
     * stage; one shutdown hook deletes it when the JVM exits. */
   private[graft] lazy val root: Path = {
     val r = Files.createTempDirectory("graft_stage_")
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+    sys.addShutdownHook(FileUtils.deleteQuietly(r.toFile))
     r
   }
 
@@ -63,17 +68,65 @@ object Staged {
   def scratch(stage: String, dir: String): String =
     once(stage, dir)(freshDir(stage))
 
-  /** A stage materialized as parquet: `write` writes the relation to
-    * the path it is given (a [[freshDir]]), once per (stage, dir).
-    * Every call reads the staged files back with the schema recorded at
-    * build time, so a memo hit starts no Spark job. */
+  /** A stage materialized as parquet: `build`'s relation is written to
+    * a [[freshDir]] once per (stage, dir), through
+    * [[PosixLocalFileSystem.writeOptions]] so the write forks no
+    * `chmod`. Every call reads the staged files back with the schema
+    * recorded at build time, so a memo hit starts no Spark job. */
   def parquet(s: SparkSession, stage: String, dir: String)(
-      write: String => Unit): DataFrame = {
+      build: => DataFrame): DataFrame = {
     val (path, schema) = once[(String, StructType)](stage, dir) {
       val path = freshDir(stage)
-      write(path)
+      build.write.mode("overwrite").options(PosixLocalFileSystem.writeOptions).parquet(path)
       (path, s.read.parquet(path).schema)
     }
     s.read.schema(schema).parquet(path)
+  }
+
+  /** The fixed `/tmp` path of a [[publish]]ed stage for the fixture dir
+    * named `fixture`: the oracle SQL names it. */
+  private def published(stage: String, fixture: String): Path =
+    Paths.get(s"/tmp/graft_${stage}_stage_$fixture")
+
+  /** The published path of `stage` that the oracle SQL reads. The SQL is
+    * a static string, so it is keyed by `SPARK_GRAFT_ORACLE_SF` (a
+    * fixture dir's name, default `sf0.01`): a check at another scale
+    * must set it, or the oracle reads another fixture's files. */
+  def publishedDir(stage: String): String =
+    published(stage, sys.env.getOrElse("SPARK_GRAFT_ORACLE_SF", "sf0.01")).toString
+
+  /** Writes a stage that the DuckDB oracle reads after the JVM has
+    * exited, on every call (no memo), and returns the directory
+    * written, for the caller to read back:
+    *  - `write` fills this process's emptied work dir
+    *    `<published>_work_<pid>`, so two processes on one fixture never
+    *    clear each other's files mid-run;
+    *  - one atomic move points the symlink at the published path for
+    *    `dir`'s name at it, so a reader always sees a whole snapshot
+    *    (every write is deterministic, so the last publisher wins);
+    *  - the work dirs of exited processes are deleted, unless linked.
+    * A real directory at the published path (the layout before the
+    * link) is deleted, as it cannot be replaced atomically. */
+  def publish(stage: String, dir: String)(write: String => Unit): String = {
+    val link = published(stage, new java.io.File(dir).getName)
+    val work = Paths.get(s"${link}_work_${ProcessHandle.current().pid()}")
+    FileUtils.deleteDirectory(work.toFile)
+    write(work.toString)
+    if (Files.isDirectory(link, LinkOption.NOFOLLOW_LINKS)) FileUtils.deleteDirectory(link.toFile)
+    val tmp = Paths.get(s"$work.link")
+    Files.deleteIfExists(tmp)
+    Files.createSymbolicLink(tmp, work)
+    Files.move(tmp, link, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    val linked = link.getParent.resolve(Files.readSymbolicLink(link))
+    val workName = s"${java.util.regex.Pattern.quote(link.getFileName.toString)}_work_(\\d+)".r
+    val siblings = Files.list(link.getParent)
+    try siblings.iterator().asScala.foreach { d =>
+      d.getFileName.toString match {
+        case workName(pid) if d != linked && !ProcessHandle.of(pid.toLong).isPresent =>
+          FileUtils.deleteDirectory(d.toFile)
+        case _ =>
+      }
+    } finally siblings.close()
+    work.toString
   }
 }

@@ -23,6 +23,12 @@ import org.apache.spark.sql.functions._
 object Conv {
   def dec2(c: Column): Column = c.cast("decimal(18,2)")
 
+  /** Spark's round(x, 6) on DoubleType, on the driver: the shortest
+    * decimal repr of `x`, rounded HALF_UP. */
+  def round6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
   /** Exact associative sum of 2-decimal doubles, emitted as double. */
   def moneySum(c: Column): Column = round(sum(dec2(c)), 2).cast("double")
 

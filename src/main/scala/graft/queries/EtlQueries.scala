@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Staged, Tables}
 import graft.Caches.PersistScoped
-import scala.jdk.CollectionConverters._
 
 /** ETL-parity operators (SURVEY.md §2B E1-E3, F4): the reference's
   * type-mapping cast pipeline (A7), its count-compare validation
@@ -222,16 +221,18 @@ object EtlQueries {
     * directly. The read declares its schema explicitly — JSON carries
     * none, and inference would cost a full extra decompress+parse
     * pass. Parallel on both sides: one .json.gz part per input
-    * partition, one read task per part file. */
+    * partition, one read task per part file. The DuckDB oracle reads
+    * the same files, published through [[Staged.publish]]. */
   def ndjsonScan(s: SparkSession, dir: String): DataFrame = {
-    val stage = ndjsonStageDir(dir)
-    // widen: a single-row-group source file would stage through ONE
-    // task and, gzip being non-splittable, read back on one core too.
-    Tables.widen(Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("o_orderpriority")))
-      .write.mode("overwrite").option("compression", "gzip")
-      .json(stage)
+    val stage = Staged.publish("ndjson", dir) { path =>
+      // widen: a single-row-group source file would stage through ONE
+      // task and, gzip being non-splittable, read back on one core too.
+      Tables.widen(Tables.orders(s, dir)
+          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+            col("o_orderpriority")))
+        .write.mode("overwrite").option("compression", "gzip")
+        .json(path)
+    }
     // Explicit schema: JSON carries none, and inference costs a full
     // extra decompress+parse pass over the staging files — the scale
     // path always declares the schema.
@@ -243,17 +244,6 @@ object EtlQueries {
         col("o_orderpriority"))
       .orderBy(col("o_orderkey"))
   }
-
-  /** Staging path keyed by the scale-factor dir name: the oracle SQL
-    * is a static string pinned to the sf0.01 path (the driver's
-    * verify scale), and keying by sf keeps a bench run at another sf
-    * from clobbering the staged files between the verify dump and the
-    * DuckDB compare. */
-  def ndjsonStageDir(dir: String): String =
-    s"/tmp/graft_ndjson_stage_${new java.io.File(dir).getName}"
-
-  def csvHostileStageDir(dir: String): String =
-    s"/tmp/graft_csvhostile_stage_${new java.io.File(dir).getName}"
 
   /** S17 — hostile-CSV interchange: every classic CSV breaker —
     * embedded delimiter, embedded double quote, embedded NEWLINE,
@@ -269,14 +259,15 @@ object EtlQueries {
     * parallel read-back — the scale posture at 100 TB is many
     * modest files, never one giant multiline CSV. */
   def csvHostile(s: SparkSession, dir: String): DataFrame = {
-    val stage = csvHostileStageDir(dir)
     val payload = concat(lit("x,"), col("o_orderpriority"), lit(",\"q\""),
       expr("chr(10)"), lit("line2\\"), col("o_orderkey").cast("string"))
-    Tables.widen(Tables.orders(s, dir)
-        .select(col("o_orderkey"), payload.as("payload")))
-      .write.mode("overwrite")
-      .option("quote", "\"").option("escape", "\"")
-      .csv(stage)
+    val stage = Staged.publish("csvhostile", dir) { path =>
+      Tables.widen(Tables.orders(s, dir)
+          .select(col("o_orderkey"), payload.as("payload")))
+        .write.mode("overwrite")
+        .option("quote", "\"").option("escape", "\"")
+        .csv(path)
+    }
     s.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "o_orderkey BIGINT, payload STRING"))
@@ -286,28 +277,23 @@ object EtlQueries {
       .orderBy(col("o_orderkey"))
   }
 
-  /** Oracle = DuckDB parsing the SAME staged files (the ndjson
-    * convention: path keyed to the verify sf). */
+  /** Oracle = DuckDB parsing the SAME staged files at their published
+    * path ([[Staged.publishedDir]]). */
   def csvHostileSql: String =
     s"""SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey, payload
-       |FROM read_csv('${csvHostileStageDir(
-             sys.env.getOrElse("SPARK_GRAFT_ORACLE_SF", "sf0.01"))}/*.csv',
+       |FROM read_csv('${Staged.publishedDir("csvhostile")}/*.csv',
        |  columns = {'o_orderkey': 'BIGINT', 'payload': 'VARCHAR'},
        |  header = false, quote = '"', escape = '"')
        |ORDER BY o_orderkey""".stripMargin
 
-  /** The oracle string must name a concrete staging path; the driver
-    * verifies at sf0.01, so that's the default. SPARK_GRAFT_ORACLE_SF
-    * re-keys it for the builder's local cross-sf sweeps (without it a
-    * local sf0.1 check reads the sf0.01 staging dir and reports a
-    * spurious row-count mismatch). */
+  /** Oracle = DuckDB parsing the SAME staged files at their published
+    * path ([[Staged.publishedDir]]). */
   def ndjsonScanSql: String =
     s"""SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
        |  CAST(o_custkey AS BIGINT) AS o_custkey,
        |  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
        |  CAST(o_orderpriority AS VARCHAR) AS o_orderpriority
-       |FROM read_json_auto('${ndjsonStageDir(
-             sys.env.getOrElse("SPARK_GRAFT_ORACLE_SF", "sf0.01"))}/*.json.gz')
+       |FROM read_json_auto('${Staged.publishedDir("ndjson")}/*.json.gz')
        |ORDER BY o_orderkey""".stripMargin
 
   /** Hive-style partition pruning at rest — the layout that makes a
@@ -725,60 +711,6 @@ object EtlQueries {
       |SELECT bucket, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents
       |FROM v GROUP BY bucket ORDER BY bucket""".stripMargin
 
-  /** The ORACLE-visible path: a pid-agnostic SYMLINK published once the
-    * frontier loop's final snapshot is committed. The actual writes go
-    * to [[rangeSinkWorkDir]] (pid-keyed), so two concurrent processes
-    * on one fixture (Verify and Bench at once) never clear each other's
-    * staged files mid-run; the loop's contents are deterministic, so
-    * whichever process publishes last leaves identical bytes behind
-    * the link. */
-  def rangeSinkStageDir(dir: String): String =
-    s"/tmp/graft_rangesink_stage_${new java.io.File(dir).getName}"
-
-  private def rangeSinkWorkDir(dir: String): String =
-    s"${rangeSinkStageDir(dir)}_work_${java.lang.ProcessHandle.current().pid()}"
-
-  /** Atomically point the published symlink at this process's work
-    * dir: stage the link next to the (pid-keyed) work dir, then one
-    * ATOMIC_MOVE replaces whatever was published before — readers (the
-    * DuckDB oracle's csv glob) always resolve a complete snapshot.
-    * Once the link has moved, the work dirs of exited processes that
-    * it does not point at are deleted, so at most one stale snapshot
-    * per fixture outlives its process. */
-  private def publishDir(work: String, publish: String): Unit = {
-    val p = java.nio.file.Paths.get(publish)
-    // migration from the pre-symlink layout: a REAL directory at the
-    // publish path can't be atomically replaced by a link — clear it
-    if (java.nio.file.Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      clearDir(publish)
-    val tmp = java.nio.file.Paths.get(s"$work.link")
-    java.nio.file.Files.deleteIfExists(tmp)
-    java.nio.file.Files.createSymbolicLink(tmp, java.nio.file.Paths.get(work))
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val linked = p.getParent.resolve(java.nio.file.Files.readSymbolicLink(p))
-    val workName = s"${java.util.regex.Pattern.quote(p.getFileName.toString)}_work_(\\d+)".r
-    val siblings = java.nio.file.Files.list(p.getParent)
-    try siblings.iterator().asScala.foreach { d =>
-      d.getFileName.toString match {
-        case workName(pid) if d != linked &&
-            !java.lang.ProcessHandle.of(pid.toLong).isPresent => clearDir(d.toString)
-        case _ =>
-      }
-    } finally siblings.close()
-  }
-
-  /** Reset the sink staging dir (fresh snapshot per run, so the
-    * oracle's part-file glob sees exactly this run's commit). */
-  private def clearDir(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isDirectory(root)) {
-      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
-  }
-
   /** S18 — the connector's WRITE half: the reference's frontier
     * migration cycle (probe MAX(pk) → read one PK slice → stage →
     * commit → advance) run entirely THROUGH the DataSource V2
@@ -793,38 +725,37 @@ object EtlQueries {
     * aggregates the COMMITTED snapshot; the oracle parses the same
     * committed part files with its own CSV reader — interchange proof
     * like S17, plus commit-protocol proof (orphaned temps and
-    * uncommitted files are invisible to both engines). */
+    * uncommitted files are invisible to both engines), published
+    * through [[Staged.publish]] once the final snapshot is committed. */
   def rangeSink(s: SparkSession, dir: String): DataFrame = {
-    val stage = rangeSinkWorkDir(dir) // pid-keyed; published via symlink below
-    clearDir(stage)
     val src = s.read.format("graft.sources.RangeSource")
       .option("lo", "0").option("hi", "120000").option("stride", "40000")
       .load()
-    def sink = s.read.format("graft.sources.RangeSource")
-      .option("path", stage).load()
-    // frontier probe on the SOURCE: pushed MAX(id), zero partitions
-    val srcMax = src.agg(max(col("id"))).head.getLong(0)
-    val rate = 40000L
-    var frontier = 0L
-    while (frontier <= srcMax) {
-      src.filter(col("id") >= frontier && col("id") < frontier + rate)
-        .write.format("graft.sources.RangeSource")
-        .option("path", stage).mode("append").save()
-      // frontier probe on the SINK: pushed MAX(id) from manifest stats
-      frontier = sink.agg(max(col("id"))).head.getLong(0) + 1
+    def sink(path: String) = s.read.format("graft.sources.RangeSource")
+      .option("path", path).load()
+    val stage = Staged.publish("rangesink", dir) { path =>
+      // frontier probe on the SOURCE: pushed MAX(id), zero partitions
+      val srcMax = src.agg(max(col("id"))).head.getLong(0)
+      val rate = 40000L
+      var frontier = 0L
+      while (frontier <= srcMax) {
+        src.filter(col("id") >= frontier && col("id") < frontier + rate)
+          .write.format("graft.sources.RangeSource")
+          .option("path", path).mode("append").save()
+        // frontier probe on the SINK: pushed MAX(id) from manifest stats
+        frontier = sink(path).agg(max(col("id"))).head.getLong(0) + 1
+      }
     }
-    publishDir(stage, rangeSinkStageDir(dir)) // oracle reads through the link
-    sink.groupBy(col("bucket"))
+    sink(stage).groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
       .orderBy(col("bucket"))
   }
 
-  /** Oracle = DuckDB parsing the SAME committed part files (the
-    * ndjson/csvHostile convention: path keyed to the verify sf). */
+  /** Oracle = DuckDB parsing the SAME committed part files at their
+    * published path ([[Staged.publishedDir]]). */
   def rangeSinkSql: String =
     s"""SELECT bucket, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents
-       |FROM read_csv('${rangeSinkStageDir(
-             sys.env.getOrElse("SPARK_GRAFT_ORACLE_SF", "sf0.01"))}/part-*.csv',
+       |FROM read_csv('${Staged.publishedDir("rangesink")}/part-*.csv',
        |  columns = {'id': 'BIGINT', 'cents': 'BIGINT', 'bucket': 'INT'},
        |  header = false)
        |GROUP BY bucket ORDER BY bucket""".stripMargin

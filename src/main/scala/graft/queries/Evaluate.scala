@@ -86,16 +86,10 @@ object Evaluate {
         val num = (0 until xs.length - k)
           .map(t => BigInt(c(t)) * BigInt(c(t + k))).sum
         val r = if (den == 0) 0.0
-                else r6(num.toDouble / den.toDouble)
+                else Conv.round6(num.toDouble / den.toDouble)
         (flag, k, n, r)
       }
     }
-
-  /** Spark's round(x, 6) on DoubleType: shortest-repr BigDecimal +
-    * HALF_UP — the one float absorber the family shares. */
-  private def r6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   private val monthlySeriesCte: String =
     """m AS MATERIALIZED (SELECT l_returnflag, date_trunc('month', l_shipdate) AS mon,
@@ -314,7 +308,7 @@ object Evaluate {
         if (1.0 - phi21 * r1 - phi22 * r2 == 0) 0.0
         else (r3 - phi21 * r2 - phi22 * r1) /
           (1.0 - phi21 * r1 - phi22 * r2)
-      (flag, n, r1, r6(phi22), r6(pacf3))
+      (flag, n, r1, Conv.round6(phi22), Conv.round6(pacf3))
     }
     import s.implicits._
     out.toDF("l_returnflag", "n_months", "pacf1", "pacf2", "pacf3")
@@ -1001,8 +995,7 @@ object Evaluate {
       if (vq <= 0L) 0.0
       else {
         val om = observed1.toDouble * 1e9 - e1q.toDouble
-        java.math.BigDecimal.valueOf(om * om / (vq.toDouble * 1e9))
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        Conv.round6(om * om / (vq.toDouble * 1e9))
       }
     val verdict = if (chi2 >= 3.841459) "different" else "no_evidence"
     import s.implicits._
@@ -1478,7 +1471,7 @@ object Evaluate {
           math.floor(r * r / (n - k) * 1e12).toLong
         }.sum
         val nLags = lags.size.toLong
-        val q = r6(n.toDouble * (n + 2) * tqs.toDouble / 1e12)
+        val q = Conv.round6(n.toDouble * (n + 2) * tqs.toDouble / 1e12)
         val verdict =
           if (nLags < 6) "insufficient"
           else if (q >= 12.591587) "autocorrelated"

@@ -799,18 +799,15 @@ object Infer {
     val kk = mr2ByTrt.size.toLong
     val sr2 = mr2ByTrt.values.map { case (r2, _) => BigInt(r2) * BigInt(r2) }
       .foldLeft(BigInt(0))(_ + _)
-    def r6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val degenerate = n == 0L || kk <= 1L
     val chi2raw = 3.0 * sr2.toDouble /
       (n.toDouble * kk * (kk + 1)) - 3.0 * n * (kk + 1)
-    val chi2 = if (degenerate) 0.0 else r6(chi2raw)
+    val chi2 = if (degenerate) 0.0 else Conv.round6(chi2raw)
     val c = 1.0 - tie3.toDouble / (n.toDouble * (kk * kk * kk - kk))
     val chi2Tie =
       if (degenerate) 0.0
       else if (c <= 0) 0.0
-      else r6(chi2raw / c)
+      else Conv.round6(chi2raw / c)
     import s.implicits._
     Seq((n, kk, chi2, chi2Tie))
       .toDF("n_blocks", "k_treatments", "chi2", "chi2_tie_corrected")

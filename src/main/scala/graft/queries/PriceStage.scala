@@ -47,7 +47,7 @@ object PriceStage {
 
   /** Staged cumulative price census (see object doc). */
   def census(s: SparkSession, dir: String): DataFrame =
-    Staged.parquet(s, "price_census", dir) { path =>
+    Staged.parquet(s, "price_census", dir) {
       val byFlag = Window.partitionBy(col("l_returnflag"))
         .orderBy(col("l_extendedprice"))
       val whole = Window.partitionBy(col("l_returnflag"))
@@ -59,6 +59,5 @@ object PriceStage {
         .withColumn("cww", sum(col("w")).over(byFlag))
         .withColumn("nt", sum(col("c")).over(whole))
         .withColumn("wt", sum(col("w")).over(whole))
-        .write.mode("overwrite").parquet(path)
     }
 }

@@ -38,17 +38,16 @@ object ShingleStage {
     * 16 permutations — the one parameterization every registered
     * consumer uses. */
   def profiles(s: SparkSession, dir: String): DataFrame =
-    Staged.parquet(s, "shingle_profiles3x16", dir) { path =>
+    Staged.parquet(s, "shingle_profiles3x16", dir) {
       Dedup.shingleProfiles(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")), 3, 16)
-        .write.mode("overwrite").parquet(path)
+        Tables.documents(s, dir).select(col("doc_id"), col("text")), 3, 16)
     }
 
   /** Staged shingle-overlap pair relation for n = 3, derived from
     * [[profiles]] — same rows as
     * `Dedup.shingleOverlapCounts(documents, 3)`. */
   def overlap3(s: SparkSession, dir: String): DataFrame =
-    Staged.parquet(s, "shingle_overlap3", dir) { path =>
+    Staged.parquet(s, "shingle_overlap3", dir) {
       val sh = profiles(s, dir)
         .select(col("doc_id"), size(col("hs")).as("n_sh"),
           explode(col("hs")).as("shash"))
@@ -58,6 +57,5 @@ object ShingleStage {
         .filter(col("doc_id_a") < col("doc_id_b"))
         .groupBy(col("doc_id_a"), col("doc_id_b"), col("n_a"), col("n_b"))
         .agg(count(lit(1)).as("inter"))
-        .write.mode("overwrite").parquet(path)
     }
 }

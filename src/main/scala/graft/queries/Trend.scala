@@ -849,16 +849,12 @@ object Trend {
         }
       }.toMap
     }
-    // Spark's round(x, 6) on DoubleType = BigDecimal.valueOf + HALF_UP
-    def r6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     val vFull = v(("full", "start"))
     val effs = attrChannels.map(c => c -> (vFull - v((s"no_$c", "start"))))
     val totEff = effs.map(_._2).reduce(_ + _) // left-assoc, channel order
     val out = effs.map { case (c, eff) =>
-      (c, r6(vFull), r6(eff),
-        r6(if (totEff != 0.0) eff / totEff else 0.0))
+      (c, Conv.round6(vFull), Conv.round6(eff),
+        Conv.round6(if (totEff != 0.0) eff / totEff else 0.0))
     }
     import s.implicits._
     out.toDF("channel", "conv_prob", "removal_effect", "share")

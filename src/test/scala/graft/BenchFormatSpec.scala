@@ -229,6 +229,29 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.isContended(calm, Seq(2)))
   }
 
+  test("engine reference: the probe at sorted index min(max(1, n/4), n - 1)") {
+    assert(Bench.engineReference(Seq.empty) == 0.0)
+    assert(Bench.engineReference(Seq(300.0)) == 300.0)
+    // up to 7 probes: the second-smallest
+    assert(Bench.engineReference(Seq(310.0, 169.0, 300.0)) == 300.0)
+    assert(Bench.engineReference(Seq(5.0, 1.0, 7.0, 2.0, 6.0, 3.0, 4.0)) == 2.0)
+    // an sf0.01 sweep's 17 engine probes (16 windows): 15 in a
+    // 199.7–273.5 ms band, the last two fast (157.8 and 139.0 ms); the
+    // second-smallest (157.8, cutoff 252.5) flagged 10 of 16 windows
+    val band = Seq(231.4, 199.7, 244.0, 258.9, 210.3, 273.5, 226.1, 238.8,
+      205.2, 262.7, 219.6, 249.3, 201.8, 267.0, 214.5)
+    val found = band ++ Seq(157.8, 139.0)
+    val ref = Bench.engineReference(found)
+    assert(ref == 205.2) // sorted index 4: the third-smallest of the band
+    val calmCpu = Seq.fill(found.size)(450.0)
+    assert(Bench.degradedWindows(calmCpu, 450.0,
+      engineProbes = found, engineRefMs = ref).isEmpty)
+    // a probe at 2× the band's top still flags both windows it borders
+    val spiked = found.updated(7, 2 * 273.5)
+    assert(Bench.degradedWindows(calmCpu, 450.0,
+      engineProbes = spiked, engineRefMs = Bench.engineReference(spiked)) == Seq(6, 7))
+  }
+
   test("probe/self-correction fields ride all three renderers") {
     // The full, compact and detailed renderers are now the record and
     // the stdout line; every probe field rides one or both.

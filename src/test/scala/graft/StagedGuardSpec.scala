@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * cross-query stages memoize through [[Staged]] only, so no
   * hand-rolled concurrent memo map (with its own lock discipline and
   * key rule) comes back, scratch directories come from
-  * [[Staged.scratch]], so no hand-built `/tmp` path (keyed by an
-  * application id, a pid or a fixture name) comes back, and every
+  * [[Staged.scratch]] and oracle-read stages from [[Staged.publish]],
+  * so no hand-built `/tmp` path (keyed by an application id, a pid or
+  * a fixture name) comes back, and every
   * parquet reader or writer the migration path opens reuses a Hadoop
   * conf, so no per-file `Configuration` parse comes back, and every
   * driver-side collect in queries/ and operators/ states its bound
@@ -45,18 +46,10 @@ class StagedGuardSpec extends AnyFunSuite {
 
   private val scratchBanned = "\"/tmp|applicationId|ProcessHandle".r
 
-  /** Fragments of the only lines that may still name `/tmp` or the
-    * process: the three stages the DuckDB oracle reads after the JVM
-    * has exited, so they cannot sit under the per-process root (each
-    * keyed by the fixture dir's name; the range sink writes to a
-    * pid-keyed work dir behind its published link and deletes those of
-    * exited processes), and Derby's error log. */
+  /** Fragment of the only line that may still name `/tmp`: Derby's
+    * error log. The three stages the DuckDB oracle reads after the JVM
+    * has exited are placed, published and swept by [[Staged.publish]]. */
   private val allowed = Seq(
-    "s\"/tmp/graft_ndjson_stage_${",
-    "s\"/tmp/graft_csvhostile_stage_${",
-    "s\"/tmp/graft_rangesink_stage_${",
-    "s\"${rangeSinkStageDir(dir)}_work_${java.lang.ProcessHandle",
-    "!java.lang.ProcessHandle.of(pid.toLong).isPresent => clearDir(d.toString)",
     "\"derby.stream.error.file\", \"/tmp/graft_derby.log\"")
 
   test("no hand-built /tmp, application-id or pid path in queries/, operators/ or etl/") {
