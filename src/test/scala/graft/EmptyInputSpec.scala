@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -43,6 +46,20 @@ class EmptyInputSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$emptyDir/$n.parquet")
     }
   }
+
+  /** The oracle-read stages (`Staged.publish`) leave a
+    * `/tmp/graft_<stage>_stage_graft_empty_sf` link to this process's
+    * `_work_<pid>` dir; no oracle reads this fixture, so both go with the
+    * suite. Other fixtures' published stages are left alone. */
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally {
+      val mine = s"graft_.+_stage_graft_empty_sf(_work_${ProcessHandle.current().pid()})?".r
+      val tmp = Files.list(Paths.get("/tmp"))
+      try tmp.iterator().asScala.filter(p => mine.matches(p.getFileName.toString)).foreach { p =>
+        if (Files.isSymbolicLink(p)) Files.delete(p) else FileUtils.deleteQuietly(p.toFile)
+      } finally tmp.close()
+    }
 
   test("every registered query survives all-empty input tables") {
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]

@@ -291,21 +291,10 @@ class EtlSpec extends SparkSpec {
     assert(filtered.count() == 500)
     // the explicit fetchsize is not just an option-map entry — it
     // survives into the planned JDBC relation the scan executes
-    val rel = back.queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if l.relation.getClass.getSimpleName == "JDBCRelation" => l.relation
-    }
-    assert(rel.nonEmpty, "expected a JDBCRelation in the plan")
-    // JDBCRelation/JDBCOptions are private[sql]; read the planned
-    // fetchsize reflectively — the point is that the option is wired
-    // into the relation the scan executes, not just into our map
-    val optsM = rel.get.getClass.getMethod("jdbcOptions")
-    optsM.setAccessible(true)
-    val opts = optsM.invoke(rel.get)
-    val fsM = opts.getClass.getMethod("fetchSize")
-    fsM.setAccessible(true)
-    assert(fsM.invoke(opts).asInstanceOf[Int] == 10000,
-      s"fetchsize lost in planning: ${fsM.invoke(opts)}")
+    val planned = org.apache.spark.sql.GraftSqlShim.jdbcSource(back)
+    assert(planned.nonEmpty, "expected a JDBCRelation in the plan")
+    assert(planned.get._1.fetchSize == 10000,
+      s"fetchsize lost in planning: ${planned.get._1.fetchSize}")
   }
 
   test("incremental frontier loop over a JDBC source: crash, resume, validate") {
