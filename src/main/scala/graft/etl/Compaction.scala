@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Small-file compaction — the 100 TB hygiene operator every
   * long-running ingest needs: incremental range sinks (this repo's
@@ -21,24 +22,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object Compaction {
 
   /** Total bytes and file count of the parquet data files under `dir`
-    * (recursive via the Hadoop FileSystem of the path's scheme;
-    * ignores _SUCCESS/metadata/hidden files). */
+    * (recursive via the Hadoop FileSystem of the path's scheme). Like
+    * Spark's file index, it skips every file or directory whose name
+    * starts with `.`, or with `_` and holds no `=`: a crashed write's
+    * `_temporary/` or `_tmp-*` files are no data. */
   def listBytes(s: SparkSession, dir: String): (Long, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    var bytes = 0L
-    var n = 0
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith(".") &&
-          !name.startsWith("_")) {
-        bytes += f.getLen
-        n += 1
-      }
+    def visible(f: FileStatus) = {
+      val n = f.getPath.getName
+      !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
     }
-    (bytes, n)
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.filter(visible)
+      .flatMap(f => if (f.isDirectory) files(f.getPath) else Seq(f))
+    val data = files(path).filter(_.getPath.getName.endsWith(".parquet"))
+    (data.map(_.getLen).sum, data.size)
   }
 
   /** Rewrite `inDir` into `outDir` with ceil(bytes/targetBytes)

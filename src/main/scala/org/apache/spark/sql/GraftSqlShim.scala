@@ -1,18 +1,23 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JDBCPartition, JDBCRelation}
 
-/** The sanctioned crossings into Spark's `private[sql]` surface, the
+/** The sanctioned crossings into Spark's `private[sql]` and
+  * `private[spark]` surface, the
   * same doorway every planner-extending library (Delta, Sedona, Iceberg
   * runtime) uses. Nothing else may live in this package: keeping the
-  * shim to two short forwarders makes the internal-API exposure
+  * shim to three short forwarders makes the internal-API exposure
   * auditable.
   *  - [[ofRows]]: wrapping a custom [[LogicalPlan]] (graft.plans.AsofJoin)
   *    in a DataFrame requires `Dataset.ofRows`.
   *  - [[jdbcSource]]: the options of a bare JDBC read, for
   *    graft.etl.JdbcProbe; `JDBCRelation` is `private[sql]`.
+  *  - [[setOutputMetrics]]: a DSv2 write task's bytes and records
+  *    written, for graft.etl.ParquetRangeTable; `OutputMetrics`'
+  *    setters are `private[spark]`.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -30,5 +35,13 @@ object GraftSqlShim {
         case _ => None
       }
       case _ => None
+    }
+
+  /** Sets the running task's output bytes and records; no-op off a task. */
+  def setOutputMetrics(bytes: Long, records: Long): Unit =
+    Option(TaskContext.get()).foreach { c =>
+      val m = c.taskMetrics().outputMetrics
+      m.setBytesWritten(bytes)
+      m.setRecordsWritten(records)
     }
 }

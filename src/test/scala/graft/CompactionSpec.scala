@@ -35,4 +35,18 @@ class CompactionSpec extends SparkSpec {
       targetBytes = 64L * 1024 * 1024)
     assert(n2 <= n1)
   }
+
+  test("sizing skips the files of hidden and underscore directories, as Spark's reader does") {
+    val out = tmp()
+    Tables.orders(spark, sfDir).repartition(4).write.parquet(s"$out/in")
+    val before = Compaction.listBytes(spark, s"$out/in")
+    val dir = java.nio.file.Paths.get(out, "in")
+    val part = dir.toFile.listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+    for (stray <- Seq("_temporary/0/part-x.parquet", ".hidden/part-y.parquet")) {
+      java.nio.file.Files.createDirectories(dir.resolve(stray).getParent)
+      java.nio.file.Files.copy(part, dir.resolve(stray))
+    }
+    assert(spark.read.parquet(s"$out/in").count() == Tables.orders(spark, sfDir).count())
+    assert(before._2 == 4 && Compaction.listBytes(spark, s"$out/in") == before)
+  }
 }

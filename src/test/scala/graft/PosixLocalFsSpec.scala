@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
 import graft.etl.{DerbyStage, IncrementalRunner, ParquetRangeSink, PosixLocalFileSystem, StateStore}
 
 /** The migration path's local writes set file modes without forking
-  * `chmod`, and leave the same modes, files and rows as Hadoop's own
-  * local file system. */
+  * `chmod`, and leave the same modes and rows as Hadoop's own local
+  * file system; the range sink writes no checksum or marker file. */
 class PosixLocalFsSpec extends SparkSpec {
 
   private def fs(): FileSystem = {
@@ -24,13 +24,12 @@ class PosixLocalFsSpec extends SparkSpec {
 
   private def mode(p: Path): String = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
-  /** Every entry under `root` (the root too) as (relative path with Spark's
-    * job UUIDs blanked, mode), sorted. */
-  private def modes(root: Path): Seq[(String, String)] = {
-    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+  /** Every entry under `root` (the root too) as (relative path, is a
+    * directory, mode), sorted. */
+  private def modes(root: Path): Seq[(String, Boolean, String)] = {
     val walk = Files.walk(root)
     try walk.iterator().asScala.map { p =>
-      (root.relativize(p).toString.replaceAll(uuid, "<uuid>"), mode(p))
+      (root.relativize(p).toString, Files.isDirectory(p), mode(p))
     }.toList.sorted
     finally walk.close()
   }
@@ -44,11 +43,17 @@ class PosixLocalFsSpec extends SparkSpec {
     df.write.parquet(plain.toString)
     val a = modes(base.resolve("sink"))
     val b = modes(base.resolve("plain"))
-    assert(a.exists(_._1.endsWith(".parquet.crc")) && a.exists(_._1.endsWith("_SUCCESS")))
-    assert(a == b)
+    // the sink writes data files only: no .crc checksum, no _SUCCESS marker
+    val (dirs, files) = a.partition(_._2)
+    assert(files.size == 3 && files.forall(_._1.endsWith(".parquet")), files)
+    assert(b.exists(_._1.endsWith(".parquet.crc")) && b.exists(_._1.endsWith("_SUCCESS")))
+    assert(dirs == b.filter(_._2))
+    val plainData = b.filter(f => !f._2 && f._1.endsWith(".parquet"))
+    assert(files.map(_._3).toSet == plainData.map(_._3).toSet)
     assert(sink.count(spark, "t", -1, 2999) == 3000L)
-    assert(spark.read.parquet(sink.path("t", -1, 2999)).count() == 3000L)
-    assert(spark.read.parquet(plain.toString).count() == 3000L)
+    val rows = spark.read.parquet(sink.path("t", -1, 2999)).orderBy("id").collect().toSeq
+    assert(rows.size == 3000)
+    assert(rows == spark.read.parquet(plain.toString).orderBy("id").collect().toSeq)
     assert(new ParquetRangeSink(base.resolve("plain").toString).count(spark, "t", -1, 2999) == 3000L)
   }
 
